@@ -265,16 +265,13 @@ def main() -> None:
     # Localized-diff scale probe (r15): at sf0.1 the localized pair's
     # WALL times cannot show the pruning win — both members are
     # dominated by single-split serial scans and per-job overhead on a
-    # 20 MB page-cache-resident fixture, and the small-input one-job
-    # pruned path deliberately trades extra (local, tiny) exchanges
-    # for barrier-freedom. The scale signal is SHUFFLE BYTES in the
-    # 100 TB configuration: the pruned path is forced onto its pin
-    # strategy (what a big input selects automatically) and the probe
-    # reads per-stage shuffleWriteBytes deltas from the UI API
-    # (deterministic, like the jaccard probe below). full shuffles
-    # every (key, fingerprint) row into the classification join;
-    # pruned-pin shuffles only the changed-bucket slice (3/64 of the
-    # fixture) plus 64-row bucket summaries. minParallelism=1
+    # 20 MB page-cache-resident fixture. The scale signal is SHUFFLE
+    # BYTES in the 100 TB configuration: the probe reads per-stage
+    # shuffleWriteBytes deltas from the UI API (deterministic, like
+    # the jaccard probe above). full shuffles every (key, fingerprint)
+    # row into the classification join; the pinned pruned diff
+    # shuffles only the changed-bucket slice (3/64 of the fixture)
+    # plus 64-row bucket summaries. minParallelism=1
     # reproduces the at-scale plan shape: the pin path's
     # ensure_min_parallelism widen never fires on real multi-split
     # inputs, and its local-fixture-only exchange would otherwise
@@ -287,7 +284,6 @@ def main() -> None:
             snapshot_file_localized,
         )
         from mydatasyncer_spark.operators.diff import (
-            PRUNE_PIN_THRESHOLD_CONF,
             diff_counts,
             diff_counts_pruned,
         )
@@ -315,14 +311,9 @@ def main() -> None:
                 ),
             ),
         ):
-            if probe_name == "pruned_pin":
-                spark.conf.set(PRUNE_PIN_THRESHOLD_CONF, "0")
-            try:
-                before = shuffle_by_stage()
-                probe_fn().count()
-                after = shuffle_by_stage()
-            finally:
-                spark.conf.unset(PRUNE_PIN_THRESHOLD_CONF)
+            before = shuffle_by_stage()
+            probe_fn().count()
+            after = shuffle_by_stage()
             diff_localized_shuffle_mb[probe_name] = round(
                 sum(v for k, v in after.items() if k not in before) / 1e6,
                 3,
@@ -453,10 +444,14 @@ def main() -> None:
     # scaling run used to clobber BENCH_SIDECAR.json and lose the
     # 32-core per-shot record for the ~100 suppressed fast queries.
     # The canonical name is still written (existing tooling reads
-    # it); the _c{N} twin survives a multi-config round.
-    cpus_tag = os.environ.get("SPARK_GRAFT_CPUS", "default")
+    # it); the _c{N} twin, written only when SPARK_GRAFT_CPUS names
+    # the core count, survives a multi-config round.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     here = os.path.dirname(os.path.abspath(__file__))
-    for fname in ("BENCH_SIDECAR.json", f"BENCH_SIDECAR_c{cpus_tag}.json"):
+    fnames = ["BENCH_SIDECAR.json"]
+    if cpus:
+        fnames.append(f"BENCH_SIDECAR_c{cpus}.json")
+    for fname in fnames:
         try:
             with open(os.path.join(here, fname), "w") as fh:
                 json.dump(sidecar, fh, indent=1, sort_keys=True)

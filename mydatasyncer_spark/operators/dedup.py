@@ -36,7 +36,7 @@ it as the standing 100 TB path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from mydatasyncer_spark.functions.hashing import seeded_hash48
@@ -795,18 +795,6 @@ def simhash(
     return votes.select(id_col, sig.cast("long").alias("simhash"))
 
 
-def simhash_buckets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Signature groups with >1 member = hamming-0 near-dup buckets."""
-    return (
-        simhash(df, text_col, id_col)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1007,6 +995,32 @@ def _prefix_rows(ordered: DataFrame, id_col: str, t: float, side: str) -> DataFr
 ID_BUCKET_COL = "_id_bucket"
 #: metadata key (on the id column) carrying the id-bucket modulus
 _ID_NB_KEY = "id_bucket_count"
+
+
+def id_bucket_layout(
+    columns: list[str], partition_by: list[str] | None = None
+) -> list[str]:
+    """Partition columns a store rewrite uses so the reserved
+    :data:`ID_BUCKET_COL` layout is never silently flattened (the
+    verify-side partition pruning its readers rely on): with no
+    ``partition_by``, partition by the id bucket when the frame
+    carries it; with one, append the id bucket when the frame carries
+    it and the list lacks it (the IVF index's ``bucket/_id_bucket``
+    nesting survives a caller naming only its primary key)."""
+    parts = list(partition_by or [])
+    if ID_BUCKET_COL in columns and ID_BUCKET_COL not in parts:
+        parts.append(ID_BUCKET_COL)
+    return parts
+
+
+def overwrite_writer(
+    df: DataFrame, partition_by: list[str] | None = None
+) -> DataFrameWriter:
+    """``df.write.mode("overwrite")``, partitioned per
+    :func:`id_bucket_layout`."""
+    w = df.write.mode("overwrite")
+    parts = id_bucket_layout(df.columns, partition_by)
+    return w.partitionBy(*parts) if parts else w
 
 
 def id_bucketed_index(
@@ -1494,11 +1508,7 @@ def jaccard_restore_staging(spark, index_path: str) -> bool:
     # staging and index are distinct paths: a direct file-to-file
     # copy, no executor-memory pinning of the corpus. An id-bucketed
     # layout is preserved (the staged copy carries the bucket column).
-    staged = spark.read.parquet(staging)
-    w = staged.write.mode("overwrite")
-    if ID_BUCKET_COL in staged.columns:
-        w = w.partitionBy(ID_BUCKET_COL)
-    w.parquet(index_path)
+    overwrite_writer(spark.read.parquet(staging)).parquet(index_path)
     _delete_path(spark, staging)
     return True
 
@@ -1513,15 +1523,8 @@ def _staged_index_rewrite(spark, frame: DataFrame, index_path: str) -> None:
     :data:`ID_BUCKET_COL` is written ``partitionBy`` at both steps,
     so the bucketed layout survives rewrites and restores."""
     staging = index_path.rstrip("/") + INDEX_STAGING_SUFFIX
-    w = frame.write.mode("overwrite")
-    if ID_BUCKET_COL in frame.columns:
-        w = w.partitionBy(ID_BUCKET_COL)
-    w.parquet(staging)
-    staged = spark.read.parquet(staging)
-    w2 = staged.write.mode("overwrite")
-    if ID_BUCKET_COL in staged.columns:
-        w2 = w2.partitionBy(ID_BUCKET_COL)
-    w2.parquet(index_path)
+    overwrite_writer(frame).parquet(staging)
+    overwrite_writer(spark.read.parquet(staging)).parquet(index_path)
     _delete_path(spark, staging)
 
 
@@ -1786,16 +1789,10 @@ def jaccard_refreeze(
     _delete_path(spark, order_loc)
     if prefix_store_path is not None:
         _delete_path(spark, prefix_store_path)
-    w = reordered.write.mode("overwrite")
-    if ID_BUCKET_COL in reordered.columns:
-        w = w.partitionBy(ID_BUCKET_COL)
-    w.parquet(staging)
+    overwrite_writer(reordered).parquet(staging)
     staged = spark.read.parquet(staging)
     docs = staged.count()
-    w2 = staged.write.mode("overwrite")
-    if ID_BUCKET_COL in staged.columns:
-        w2 = w2.partitionBy(ID_BUCKET_COL)
-    w2.parquet(index_path)
+    overwrite_writer(staged).parquet(index_path)
     _delete_path(spark, staging)
     new_order.write.mode("overwrite").parquet(order_loc)
     if prefix_store_path is not None:

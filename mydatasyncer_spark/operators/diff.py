@@ -24,6 +24,7 @@ small DB side gets broadcast automatically (autoBroadcastJoinThreshold
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -265,17 +266,6 @@ def diff_changes(
     )
 
 
-#: per-side size (Catalyst estimate, bytes) above which
-#: :func:`diff_counts_pruned` pins the narrow frame; inputs at or
-#: under it take the barrier-free one-job form. Default 0 = pin
-#: always (the measured winner at every size — lineage truncation
-#: beats the pin barrier; see the function docstring). Overridable
-#: per session.
-PRUNE_PIN_THRESHOLD_CONF = (
-    "spark.mydatasyncer.diff.prunedPinThresholdBytes"
-)
-_PRUNE_PIN_THRESHOLD_DEFAULT = 0
-
 #: widen cap for the pruned diff's single-split-input widening: the
 #: post-exchange work is ONE narrow fingerprint pass (not a fan-out),
 #: so full-cluster width pays more task-wave scheduling than the
@@ -286,17 +276,43 @@ _PRUNE_PIN_THRESHOLD_DEFAULT = 0
 _PIN_WIDEN_TARGET = 8
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the frame (file sizes propagated
-    through the optimized plan). Used only to pick between two
-    result-identical execution strategies; when the estimate is
-    unavailable, assume BIG — the pin path is the safe one at scale."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+def _changed_bucket_ids(
+    fs: DataFrame, f_fp: str, ds: DataFrame, d_fp: str
+) -> list[int]:
+    """Sorted ``_bucket`` ids whose content differs between two
+    ``(_bucket, fingerprint)`` frames — the one bucket-summary kernel
+    behind :func:`changed_buckets` and :func:`diff_counts_pruned`.
+
+    Each side collapses to one ``(count, xor, exact sum)`` row per
+    bucket of its row fingerprints (order-independent, map-side
+    partially aggregated). XOR alone self-cancels duplicate rows: a
+    bucket swapping a duplicated pair ``{A,A}`` for ``{C,C}`` keeps
+    ``(count, xor)`` — the decimal sum breaks that cancellation. A
+    ``decimal(38,0)`` sum of 64-bit fingerprints only overflows past
+    ~1e19 rows in one bucket, and with ANSI mode off (the session
+    default) overflow yields NULL rather than an error — so the sums
+    compare null-safely, and a NULL on one side only flags the
+    bucket. One-sided presence flags it too. The collect is bounded
+    by the bucket count (a few hundred ints, never row data)."""
+
+    def summary(s: DataFrame, fp: str, side: str) -> DataFrame:
+        return s.groupBy("_bucket").agg(
+            F.count(F.lit(1)).alias(f"_n_{side}"),
+            F.bit_xor(fp).alias(f"_x_{side}"),
+            F.sum(F.col(fp).cast("decimal(38,0)")).alias(f"_s_{side}"),
         )
-    except Exception:
-        return 1 << 62
+
+    j = summary(fs, f_fp, "f").join(
+        summary(ds, d_fp, "d"), "_bucket", "full_outer"
+    )
+    changed = j.filter(
+        F.col("_n_f").isNull()
+        | F.col("_n_d").isNull()
+        | (F.col("_n_f") != F.col("_n_d"))
+        | (F.col("_x_f") != F.col("_x_d"))
+        | ~F.col("_s_f").eqNullSafe(F.col("_s_d"))
+    ).select("_bucket")
+    return sorted(r["_bucket"] for r in changed.collect())
 
 
 def diff_counts_pruned(
@@ -312,171 +328,57 @@ def diff_counts_pruned(
     buckets whose fingerprints changed — the counts twin of
     :func:`diff_snapshots_pruned`.
 
-    Two result-identical execution strategies
-    (``spark.mydatasyncer.diff.prunedPinThresholdBytes``: inputs whose
-    Catalyst size estimate exceeds it take the pin path; default 0 =
-    pin always, the measured winner at every size — see below):
+    Each side collapses ONCE to the narrow ``(bucket, canonical key,
+    row fingerprint)`` frame — widened through one keyed exchange
+    first so the fingerprint computes across the cluster even off a
+    single-split source (no-op at scale) — then pinned with an eager
+    ``localCheckpoint`` (~17 bytes/row of executor-local state per
+    side, cheaper than a second full read of every sync column;
+    blocks are NOT replicated, so an executor loss mid-query
+    recomputes from source — acceptable for a derived frame inside
+    one query). The changed-bucket summary aggregates FROM the pinned
+    frames and the classification join filters the SAME frames, so
+    each wide snapshot is read once — and every post-pin plan is
+    lineage-truncated, which keeps driver-side analysis of the
+    pruned query cheap even on small inputs.
 
-    - **Pin path (default; also the 100 TB shape):** each side
-      collapses ONCE to the narrow ``(bucket, canonical key, row
-      fingerprint)`` frame — widened through one keyed exchange first
-      so the fingerprint computes across the cluster even off a
-      single-split source (no-op at scale) — then pinned with an
-      eager ``localCheckpoint`` (~17 bytes/row of executor-local
-      state per side, cheaper than a second full read of every sync
-      column; blocks are NOT replicated, so an executor loss
-      mid-query recomputes from source — acceptable for a derived
-      frame inside one query). The :func:`changed_buckets` summary
-      aggregates FROM the pinned frame and the classification join
-      filters the SAME frame, so the wide snapshot is read once per
-      side — and every post-pin plan is lineage-truncated, which is
-      what makes this form fastest even on small inputs (driver
-      analysis of the pruned query's full DAG costs more than the
-      pin barrier; measured r15, counts fixture 1.8 vs 2.2 s,
-      localized 2.8 vs 3.8 s).
-    - **One-job path (raise the threshold to select it):** the
-      changed-bucket set is never collected to the driver — it stays
-      a ≤ ``n_buckets``-row frame, broadcast, and each side prunes
-      with a ``left_semi`` join on ``_bucket``; AQE's runtime
-      exchange reuse executes each side's scan+fingerprint once.
-      Barrier-free (no pin, no collect), kept as the selectable
-      strategy for environments where a localCheckpoint is
-      undesirable (e.g. no executor-local storage to spare).
-
-    Bucket selection and classification expressions are identical in
-    both, so the counts are byte-identical to the full diff (pruning
-    stays invisible, modulo the documented fingerprint collision
-    odds; the sums are zero-coalesced so the no-changed-buckets case
-    counts 0, exactly like ``count()`` over an empty leg).
+    The counts are byte-identical to the full diff (pruning stays
+    invisible, modulo the documented fingerprint collision odds; the
+    sums are zero-coalesced so the no-changed-buckets case counts 0,
+    exactly like ``count()`` over an empty leg).
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
     if bucket_fn is None:
         bucket_fn = lambda d: bucket_col(d, primary_key, n_buckets)  # noqa: E731
-    file_p = file_df.select(*columns)
-    db_p = db_df.select(*columns)
-    threshold = int(
-        file_df.sparkSession.conf.get(
-            PRUNE_PIN_THRESHOLD_CONF, str(_PRUNE_PIN_THRESHOLD_DEFAULT)
+
+    def pinned(df: DataFrame, fp: str) -> DataFrame:
+        p = df.select(*columns)
+        keyed = with_canonical_key(
+            p.select(bucket_fn(p).alias("_bucket"), *columns), primary_key
         )
-    )
-    # only pay the Catalyst size estimate (two driver-side optimizer
-    # invocations, ~0.1-0.5 s on the localized plans) when the
-    # threshold actually needs a decision — at the default 0 the pin
-    # path is unconditional
-    pin = threshold <= 0 or (
-        max(_plan_size_bytes(file_p), _plan_size_bytes(db_p)) > threshold
-    )
-
-    def keyed(df_p: DataFrame) -> DataFrame:
-        b = df_p.select(bucket_fn(df_p).alias("_bucket"), *columns)
-        return with_canonical_key(b, primary_key)
-
-    def narrow(k: DataFrame, fp_alias: str) -> DataFrame:
-        # project to the 17-byte/row frame BEFORE any widening
-        # exchange: the exchange then carries (bucket, key,
-        # fingerprint) instead of every sync column, and the
-        # fingerprint is computed exactly once per source row
-        return k.select(
-            "_bucket",
-            F.col(_KEY),
-            row_fingerprint(k, columns).alias(fp_alias),
-        )
-
-    def summarize(s: DataFrame, fp_alias: str, side: str) -> DataFrame:
-        # (count, xor, exact sum) — same triple as changed_buckets;
-        # the sum breaks XOR's duplicate-pair self-cancellation (the
-        # r14-sweep finding; see changed_buckets for the full note)
-        return s.groupBy("_bucket").agg(
-            F.count(F.lit(1)).alias(f"_n_{side}"),
-            F.bit_xor(fp_alias).alias(f"_x_{side}"),
-            F.sum(F.col(fp_alias).cast("decimal(38,0)")).alias(
-                f"_s_{side}"
-            ),
-        )
-
-    def changed_of(fs_sum: DataFrame, ds_sum: DataFrame) -> DataFrame:
-        j = summarize(fs_sum, "_f_fp", "f").join(
-            summarize(ds_sum, "_d_fp", "d"), "_bucket", "full_outer"
-        )
-        return j.filter(
-            F.col("_n_f").isNull()
-            | F.col("_n_d").isNull()
-            | (F.col("_n_f") != F.col("_n_d"))
-            | (F.col("_x_f") != F.col("_x_d"))
-            | (F.col("_s_f") != F.col("_s_d"))
-        ).select("_bucket")
-
-    if pin:
-        # the two pins are independent jobs — run them concurrently so
-        # one side's stragglers back-fill with the other side's tasks
-        # (guide §2.6; measured: serial pins cost ~2× the pair's wall
-        # at sf0.1)
-        from concurrent.futures import ThreadPoolExecutor
-
         # widen (keyed on the join key) BEFORE the narrow projection,
         # so the per-row fingerprint runs across the cluster instead
-        # of inside a single-split source task (the exchange then
-        # carries the wide rows once — measured: Spark does not move
-        # the projection below a repartition, so widening after
-        # narrow() would leave the fingerprint serial). A no-op at
-        # scale, where the scan already carries the splits.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_f = pool.submit(
-                lambda: narrow(
-                    ensure_min_parallelism(
-                        keyed(file_p), _KEY, target=_PIN_WIDEN_TARGET
-                    ),
-                    "_f_fp",
-                ).localCheckpoint(eager=True)
-            )
-            fut_d = pool.submit(
-                lambda: narrow(
-                    ensure_min_parallelism(
-                        keyed(db_p), _KEY, target=_PIN_WIDEN_TARGET
-                    ),
-                    "_d_fp",
-                ).localCheckpoint(eager=True)
-            )
-            fs, ds = fut_f.result(), fut_d.result()
-        # the pins are already materialized, so the bounded collect
-        # (≤ n_buckets ints) costs one tiny job over narrow blocks
-        buckets = sorted(
-            r["_bucket"] for r in changed_of(fs, ds).collect()
-        )
-        out = _classify_counts(
-            fs.filter(F.col("_bucket").isin(buckets)).drop("_bucket"),
-            ds.filter(F.col("_bucket").isin(buckets)).drop("_bucket"),
-            delete_not_in_file,
-        )
-    else:
-        # one narrow keyed-widen exchange per side, consumed by BOTH
-        # the summary subtree (inside the broadcast) and the
-        # classification leg — the exchanges are plan-identical, so
-        # AQE's runtime exchange reuse executes each side's
-        # scan+fingerprint ONCE (verified: the duplicate stages show
-        # as SKIPPED). The widen is keyed on the canonical join key
-        # (no sort-before-repartition on the serial source task, and
-        # the classification join inherits the partitioning — guide
-        # §2.4/§2.5); at scale the input already carries enough
-        # splits and the widen is a no-op.
-        fs = ensure_min_parallelism(
-            narrow(keyed(file_p), "_f_fp"), _KEY, target=_PIN_WIDEN_TARGET
-        )
-        ds = ensure_min_parallelism(
-            narrow(keyed(db_p), "_d_fp"), _KEY, target=_PIN_WIDEN_TARGET
-        )
-        changed = F.broadcast(changed_of(fs, ds))
+        # of inside a single-split source task (measured: Spark does
+        # not move the projection below a repartition)
+        wide = ensure_min_parallelism(keyed, _KEY, target=_PIN_WIDEN_TARGET)
+        return wide.select(
+            "_bucket", F.col(_KEY), row_fingerprint(wide, columns).alias(fp)
+        ).localCheckpoint(eager=True)
 
-        def pruned(s: DataFrame, fp_alias: str) -> DataFrame:
-            # broadcast semi-join on the changed set: no driver
-            # collect, no barrier — only the changed slice flows into
-            # the classification join
-            return s.join(changed, "_bucket", "left_semi").drop("_bucket")
-
-        out = _classify_counts(
-            pruned(fs, "_f_fp"), pruned(ds, "_d_fp"), delete_not_in_file
-        )
+    # the two pins are independent jobs — run them concurrently so one
+    # side's stragglers back-fill with the other side's tasks (guide
+    # §2.6; measured: serial pins cost ~2× the pair's wall at sf0.1)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fut_f = pool.submit(pinned, file_df, "_f_fp")
+        fut_d = pool.submit(pinned, db_df, "_d_fp")
+        fs, ds = fut_f.result(), fut_d.result()
+    buckets = _changed_bucket_ids(fs, "_f_fp", ds, "_d_fp")
+    out = _classify_counts(
+        fs.filter(F.col("_bucket").isin(buckets)).drop("_bucket"),
+        ds.filter(F.col("_bucket").isin(buckets)).drop("_bucket"),
+        delete_not_in_file,
+    )
     return out.select(
         *[
             F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(c)
@@ -503,70 +405,35 @@ def changed_buckets(
     """Bucket ids whose content differs between the two snapshots.
 
     Each side collapses to ``n_buckets`` summary rows of
-    ``(count, bit_xor(row_fingerprint), sum(row_fingerprint))`` — an
-    order-independent bucket fingerprint computed in one narrow scan
-    with map-side partial aggregation. A bucket matching on all three
-    statistics is declared unchanged; mismatch (or one-sided
-    presence) marks it changed. The triple shares the fingerprint
-    trade-off already documented on :func:`row_differs`: a change
-    pattern colliding on count AND xor AND exact sum goes unseen —
-    hash-collision-class odds. (Before r15 the pair was
-    ``(count, xor)`` only, and XOR's self-cancellation made a
-    duplicated-row-pair swap ``{A,A}→{C,C}`` invisible
-    DETERMINISTICALLY — the r14-sweep finding; the sum statistic
-    closes it.)
-
-    The returned list is bounded by ``n_buckets`` (a driver-side
-    collect of a few hundred ints, same class as the dry-run's
-    bounded aggregates — never row data).
+    ``(count, xor, exact sum)`` over its row fingerprints, computed
+    in one narrow scan (see :func:`_changed_bucket_ids`). A bucket
+    matching on all three statistics is declared unchanged. The
+    triple shares the fingerprint trade-off already documented on
+    :func:`row_differs`: a change pattern colliding on count AND xor
+    AND exact sum goes unseen — hash-collision-class odds.
 
     ``bucket_fn`` overrides the default key-hash bucketing with any
     deterministic ``DataFrame -> Column`` in ``[0, n_buckets)`` — e.g.
     a key-RANGE bucket for data whose daily changes cluster by key
     (append-mostly tables), where range buckets localize changes that
-    a hash would scatter across every bucket.
+    a hash would scatter across every bucket. It sees the FULL frame
+    (not the sync-column projection), so a caller can bucket by a
+    stored partition column that isn't a sync column — e.g. the SCD2
+    table's ``_pk_bucket``, which makes the downstream pruned re-read
+    partition-prunable.
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
     if bucket_fn is None:
         bucket_fn = lambda d: bucket_col(d, primary_key, n_buckets)  # noqa: E731
 
-    def summarize(df: DataFrame, side: str) -> DataFrame:
-        # bucket_fn sees the FULL frame (not the projection) so a
-        # caller can bucket by a stored partition column that isn't a
-        # sync column — e.g. the SCD2 table's _pk_bucket, which makes
-        # the downstream pruned re-read partition-prunable
+    def fingerprinted(df: DataFrame) -> DataFrame:
         p = df.select(bucket_fn(df).alias("_bucket"), *columns)
-        return (
-            p.select(
-                F.col("_bucket"),
-                row_fingerprint(p, columns).alias("_fp"),
-            )
-            .groupBy("_bucket")
-            .agg(
-                F.count(F.lit(1)).alias(f"_n_{side}"),
-                F.bit_xor("_fp").alias(f"_x_{side}"),
-                # third statistic (r15, the r14-sweep finding): XOR
-                # alone self-cancels duplicate rows, so replacing a
-                # duplicated pair {A,A} with {C,C} inside one bucket
-                # preserved (count, xor) DETERMINISTICALLY. The exact
-                # decimal sum breaks the cancellation (overflow-safe
-                # under ANSI; order-independent); duplicates now
-                # collide only if xor AND sum both match.
-                F.sum(F.col("_fp").cast("decimal(38,0)")).alias(
-                    f"_s_{side}"
-                ),
-            )
-        )
-    j = summarize(file_df, "f").join(summarize(db_df, "d"), "_bucket", "full_outer")
-    changed = j.filter(
-        F.col("_n_f").isNull()
-        | F.col("_n_d").isNull()
-        | (F.col("_n_f") != F.col("_n_d"))
-        | (F.col("_x_f") != F.col("_x_d"))
-        | (F.col("_s_f") != F.col("_s_d"))
-    ).select("_bucket")
-    return sorted(r["_bucket"] for r in changed.collect())
+        return p.select("_bucket", row_fingerprint(p, columns).alias("_fp"))
+
+    return _changed_bucket_ids(
+        fingerprinted(file_df), "_fp", fingerprinted(db_df), "_fp"
+    )
 
 
 def diff_snapshots_pruned(

@@ -37,6 +37,8 @@ from mydatasyncer_spark.operators.dedup import (
     INDEX_STAGING_SUFFIX,
     _delete_path,
     _job_succeeded,
+    id_bucket_layout,
+    overwrite_writer,
 )
 
 
@@ -110,39 +112,11 @@ def restore_staging(spark, path: str, partition_by: list[str] | None = None) -> 
             merged = staged.unionByName(
                 spark.read.parquet(path)
             ).distinct()
-            w0 = merged.write.mode("overwrite")
-            mp = partition_by
-            if mp is None and ID_BUCKET_COL in staged.columns:
-                mp = [ID_BUCKET_COL]
-            elif (
-                mp
-                and ID_BUCKET_COL in staged.columns
-                and ID_BUCKET_COL not in mp
-            ):
-                mp = [*mp, ID_BUCKET_COL]
-            if mp:
-                w0 = w0.partitionBy(*mp)
-            w0.parquet(merge_tmp)
+            overwrite_writer(merged, partition_by).parquet(merge_tmp)
             source = spark.read.parquet(merge_tmp)
         else:
             source = staged
-    if partition_by is None and ID_BUCKET_COL in source.columns:
-        partition_by = [ID_BUCKET_COL]
-    elif (
-        partition_by
-        and ID_BUCKET_COL in source.columns
-        and ID_BUCKET_COL not in partition_by
-    ):
-        # the reserved id-bucket SUB-layout (e.g. the IVF index's
-        # bucket/_id_bucket nesting) is auto-preserved even when the
-        # caller names only the primary partition key — flattening it
-        # would silently degrade the guard-join pruning to a data
-        # filter
-        partition_by = [*partition_by, ID_BUCKET_COL]
-    w = source.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    overwrite_writer(source, partition_by).parquet(path)
     _delete_path(spark, staging)
     _delete_path(spark, merge_tmp)
     return True
@@ -224,7 +198,7 @@ def compact_table(
     duplicate-row and file-count tax (and surfaces a crashed
     rewrite's pending staging dir).
 
-    Per-store recipes (each also available as a named wrapper):
+    Per-store recipes (named wrappers exist for all but pairs tables):
 
     - MinHash signature index → ``dedupe_cols=[id_col]``
     - ``continuous_dedup`` survivors → ``dedupe_cols=[id_col]``
@@ -235,19 +209,7 @@ def compact_table(
     """
     restored = restore_staging(spark, path, partition_by)
     df = spark.read.parquet(path)
-    if partition_by is None and ID_BUCKET_COL in df.columns:
-        # the reserved id-bucket layout is preserved by default —
-        # silently flattening it would break the verify-side
-        # partition pruning its readers rely on
-        partition_by = [ID_BUCKET_COL]
-    elif (
-        partition_by
-        and ID_BUCKET_COL in df.columns
-        and ID_BUCKET_COL not in partition_by
-    ):
-        # same preservation when the caller names only the primary
-        # key of a nested layout (the IVF index's bucket/_id_bucket)
-        partition_by = [*partition_by, ID_BUCKET_COL]
+    partition_by = id_bucket_layout(df.columns, partition_by)
     raw = df.count()
     deduped = (
         df.dropDuplicates(dedupe_cols)
@@ -255,10 +217,7 @@ def compact_table(
         else df.dropDuplicates()
     )
     staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    w = deduped.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
+    overwrite_writer(deduped, partition_by).parquet(staging)
     staged = spark.read.parquet(staging)
     rows = staged.count()
     n_files = max(1, math.ceil(rows * files_per_billion_rows / 1e9))
@@ -269,16 +228,13 @@ def compact_table(
         sized = staged.repartition(
             n_files, *[F.col(c) for c in partition_by]
         )
-        sized.write.partitionBy(*partition_by).mode("overwrite").parquet(
-            path
-        )
     else:
         sized = (
             staged.coalesce(n_files)
             if n_files <= staged.rdd.getNumPartitions()
             else staged.repartition(n_files)
         )
-        sized.write.mode("overwrite").parquet(path)
+    overwrite_writer(sized, partition_by).parquet(path)
     _delete_path(spark, staging)
     return {
         "rows": rows,
@@ -749,13 +705,6 @@ def compact_survivors(spark, path: str, id_col: str = "doc_id") -> dict:
     return compact_table(spark, path, dedupe_cols=[id_col])
 
 
-def compact_pairs(spark, path: str) -> dict:
-    """Compact a pairs table (``continuous_jaccard_index`` /
-    ``continuous_dedup`` emissions): pairs are idempotent facts, a
-    replayed batch re-emits bit-identical rows — full-row dedupe."""
-    return compact_table(spark, path)
-
-
 def compact_partials(spark, path: str) -> dict:
     """Compact a ``_continuous_partials`` store (HLL / KLL / theta
     partials): rows carry their stamping batch id, so identical
@@ -1088,15 +1037,13 @@ def ivf_rebuild(
     rebuilt = ivf_index(
         vecs, dim, len(centroids), "vec_id", "embedding", centroids
     )
-    parts = ["bucket"]
     if idx_nb is not None:
         rebuilt = id_bucketed_index(rebuilt, "neighbor_id", idx_nb)
-        parts.append(ID_BUCKET_COL)
     staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    rebuilt.write.mode("overwrite").partitionBy(*parts).parquet(staging)
+    overwrite_writer(rebuilt, ["bucket"]).parquet(staging)
     staged = spark.read.parquet(staging)
     rows = staged.count()
-    staged.write.mode("overwrite").partitionBy(*parts).parquet(path)
+    overwrite_writer(staged, ["bucket"]).parquet(path)
     _delete_path(spark, staging)
     return {
         "rows": rows,
@@ -1332,15 +1279,13 @@ def pq_rebuild(
         centroids=centroids,
         residual=was_residual,
     )
-    parts = ["bucket"]
     if idx_nb is not None:
         rebuilt = id_bucketed_index(rebuilt, "neighbor_id", idx_nb)
-        parts.append(ID_BUCKET_COL)
     staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    rebuilt.write.mode("overwrite").partitionBy(*parts).parquet(staging)
+    overwrite_writer(rebuilt, ["bucket"]).parquet(staging)
     staged = spark.read.parquet(staging)
     rows = staged.count()
-    staged.write.mode("overwrite").partitionBy(*parts).parquet(path)
+    overwrite_writer(staged, ["bucket"]).parquet(path)
     _delete_path(spark, staging)
     return {
         "rows": rows,

@@ -61,13 +61,6 @@ def distinct_token_ratio(col: Column) -> Column:
     ).cast("double")
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are (English, by default) stopwords."""
-    t = tokens(col)
-    hits = F.size(F.filter(t, lambda x: x.isin(*LANG_STOPWORDS[lang])))
-    return hits.cast("double") / F.greatest(F.size(t), F.lit(1)).cast("double")
-
-
 def special_char_ratio(col: Column) -> Column:
     """Fraction of characters that are not alphanumeric/space."""
     cleaned = F.regexp_replace(F.lower(col), "[a-z0-9 ]", "")

@@ -52,15 +52,6 @@ def _quantize(col: Column, dim: ZDim, bits: int) -> Column:
     return F.least(F.lit(cells - 1), F.greatest(F.lit(0), scaled))
 
 
-def _quantize_sql(expr: str, dim: ZDim, bits: int) -> str:
-    cells = 1 << bits
-    scaled = (
-        f"CAST(FLOOR((CAST({expr} AS DOUBLE) - {float(dim.lo)!r}) "
-        f"/ {float(dim.hi - dim.lo)!r} * {float(cells)!r}) AS BIGINT)"
-    )
-    return f"LEAST({cells - 1}, GREATEST(0, {scaled}))"
-
-
 def _interleave_plan(n_dims: int, bits: int) -> list[tuple[int, int, int]]:
     """(dim, src_bit, dst_bit) placements; dim 0 owns the most
     significant bit of each interleave group."""
@@ -97,9 +88,14 @@ def zorder_key(
 
 def quantize_sql(expr: str, dim: ZDim, bits: int = DEFAULT_BITS) -> str:
     """DuckDB SQL for one dimension's quantized cell (bit-identical to
-    the Spark-side quantization) — compose with
+    the Spark-side quantization, same floor semantics) — compose with
     :func:`interleave_sql` via a CTE to keep the oracle compact."""
-    return _quantize_sql(expr, dim, bits)
+    cells = 1 << bits
+    scaled = (
+        f"CAST(FLOOR((CAST({expr} AS DOUBLE) - {float(dim.lo)!r}) "
+        f"/ {float(dim.hi - dim.lo)!r} * {float(cells)!r}) AS BIGINT)"
+    )
+    return f"LEAST({cells - 1}, GREATEST(0, {scaled}))"
 
 
 def interleave_sql(
@@ -115,17 +111,6 @@ def interleave_sql(
         else:
             parts.append(f"({bit} >> {src - dst})")
     return "(" + " | ".join(parts) + ")"
-
-
-def zorder_key_sql(
-    exprs: list[str], dims: list[ZDim], bits: int = DEFAULT_BITS
-) -> str:
-    """DuckDB SQL producing bit-identical keys to :func:`zorder_key`
-    (same quantization, same interleave plan, same floor semantics)."""
-    if len(exprs) != len(dims):
-        raise ValueError("one ZDim range per expression is required")
-    qs = [_quantize_sql(e, d, bits) for e, d in zip(exprs, dims)]
-    return interleave_sql(qs, bits)
 
 
 def zorder_signature(

@@ -36,6 +36,7 @@ Operation order within one table is insert → update → delete
 
 from __future__ import annotations
 
+import datetime
 import itertools
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -53,6 +54,19 @@ def _chunks(rows: Iterator, size: int = BATCH_SIZE):
         if not batch:
             return
         yield batch
+
+
+def _sqlite_value(v):
+    """sqlite has no timestamp type: a datetime binds as the RFC3339
+    UTC text that ``canonical_str`` compares against (second
+    precision, the canonical form), not sqlite3's default
+    ``'1995-06-28 00:00:00'``, which would differ from the file side
+    on every later sync. Converted as an instant: naive values are the
+    process-local wall time PySpark returns for timestamps. Every other
+    value binds unchanged."""
+    if isinstance(v, datetime.datetime):
+        return v.astimezone(datetime.UTC).strftime("%Y-%m-%dT%H:%M:%SZ")
+    return v
 
 
 @dataclass
@@ -78,6 +92,11 @@ class DbApiBackend:
         self.conn = connection
         self.ph = placeholder
         self.dialect = get_dialect(dialect)
+
+    def _bind(self, rows: Iterator[tuple]) -> Iterator[tuple]:
+        if self.dialect.name != "sqlite":
+            return rows
+        return (tuple(_sqlite_value(v) for v in r) for r in rows)
 
     # -- DDL helpers -------------------------------------------------
     def table_columns(self, table: str) -> list[str]:
@@ -116,7 +135,7 @@ class DbApiBackend:
         sql = f"INSERT INTO {table} ({cols}) VALUES ({phs})"
         n = 0
         cur = self.conn.cursor()
-        for batch in _chunks(rows):
+        for batch in _chunks(self._bind(rows)):
             cur.executemany(sql, batch)
             n += len(batch)
         return n
@@ -134,7 +153,7 @@ class DbApiBackend:
         sql = f"UPDATE {table} SET {sets} WHERE {primary_key} = {self.ph}"
         n = 0
         cur = self.conn.cursor()
-        for batch in _chunks(rows):
+        for batch in _chunks(self._bind(rows)):
             cur.executemany(sql, batch)
             n += len(batch)
         return n
@@ -145,7 +164,7 @@ class DbApiBackend:
         """IN-list batched delete (ref: bulkDelete, dbsync.go:895-913)."""
         n = 0
         cur = self.conn.cursor()
-        for batch in _chunks(keys):
+        for batch in _chunks(self._bind(keys)):
             phs = ", ".join([self.ph] * len(batch))
             sql = f"DELETE FROM {table} WHERE {primary_key} IN ({phs})"
             cur.execute(sql, [k[0] for k in batch])
@@ -227,8 +246,6 @@ def apply_diff(
     are excluded from the UPDATE SET entirely (O10, ref:
     dbsync.go:842-847).
     """
-    import datetime
-
     ts_cols = [c for c in (timestamp_columns or []) if c not in columns]
     immutable = set(immutable_columns or [])
     now = (now_fn or (lambda: datetime.datetime.now(datetime.UTC)))()
@@ -317,8 +334,6 @@ def stage_legs(
     unless immutable; immutable columns never appear in the UPDATE
     SET list (O10, ref: dbsync.go:842-847).
     """
-    import datetime
-
     from pyspark.sql import functions as F
 
     d = backend.dialect
@@ -473,8 +488,6 @@ def overwrite_table(
 ) -> ApplyStats:
     """Overwrite mode: truncate + bulk insert (S10+S7,
     ref: syncOverwrite, dbsync.go:494-518). Caller owns the tx."""
-    import datetime
-
     ts_cols = [c for c in (timestamp_columns or []) if c not in columns]
     now = (now_fn or (lambda: datetime.datetime.now(datetime.UTC)))()
     backend.truncate(table)

@@ -185,22 +185,6 @@ def validate_file_paths(paths: list[str]) -> None:
         raise SyncError(f"missing input files: {missing!r}")
 
 
-def load_tables(
-    spark: SparkSession,
-    specs: dict[str, str],
-    schemas: dict[str, T.StructType] | None = None,
-) -> dict[str, DataFrame]:
-    """Multi-source scan: name → path map to name → DataFrame
-    (ref: MultiTableLoader.LoadAll, loader.go:232-257). Lazy — nothing
-    reads until an action, unlike the reference's load-all-into-RAM."""
-    validate_file_paths(list(specs.values()))
-    schemas = schemas or {}
-    return {
-        name: read_file(spark, path, schema=schemas.get(name))
-        for name, path in specs.items()
-    }
-
-
 def _project(df: DataFrame, columns: list[str] | None) -> DataFrame:
     if not columns:
         return df

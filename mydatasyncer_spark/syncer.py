@@ -80,6 +80,16 @@ class _Prepared:
     diff: DiffResult | None
     file_empty: bool
 
+    @property
+    def file_rows(self) -> DataFrame:
+        """The file snapshot projected to the sync columns it carries
+        (an empty DB-shaped frame for an empty file)."""
+        if self.file_empty:
+            return self.db_df.limit(0)
+        return self.file_df.select(
+            *[c for c in self.sync_columns if c in self.file_df.columns]
+        )
+
 
 class Syncer:
     """``staging=True`` switches the write path from the per-row
@@ -128,16 +138,11 @@ class Syncer:
         if spec.sync_mode == SYNC_MODE_DIFF and not file_empty:
             validate_primary_keys(file_df, spec.primary_key, strict=True)
         db_df = self.backend.read_snapshot(self.spark, spec.name, cols)
-        diff = None
+        prep = _Prepared(spec, cols, file_df, db_df, None, file_empty)
         if spec.sync_mode == SYNC_MODE_DIFF:
-            file_proj = (
-                file_df.select(*[c for c in cols if c in file_df.columns])
-                if not file_empty
-                else db_df.limit(0)
-            )
             if spec.prune_buckets > 0:
                 diff = diff_snapshots_pruned(
-                    file_proj,
+                    prep.file_rows,
                     db_df,
                     spec.primary_key,
                     columns=cols,
@@ -146,7 +151,7 @@ class Syncer:
                 )
             else:
                 diff = diff_snapshots(
-                    file_proj,
+                    prep.file_rows,
                     db_df,
                     spec.primary_key,
                     columns=cols,
@@ -156,40 +161,22 @@ class Syncer:
             diff.to_insert.persist()
             diff.to_update.persist()
             diff.to_delete.persist()
-        return _Prepared(spec, cols, file_df, db_df, diff, file_empty)
+            prep.diff = diff
+        return prep
 
     def _plan_for(self, prep: _Prepared) -> ExecutionPlan:
         spec = prep.spec
+        diff = prep.diff
         if spec.sync_mode == SYNC_MODE_OVERWRITE:
-            file_n = 0 if prep.file_empty else prep.file_df.count()
-            db_n = prep.db_df.count()
             # overwrite plan = delete-all + insert-all (ref: dbsync.go:359-370)
             empty = prep.db_df.limit(0)
-            to_insert = (
-                prep.file_df.select(
-                    *[c for c in prep.sync_columns if c in prep.file_df.columns]
-                )
-                if not prep.file_empty
-                else empty
-            )
-            diff = DiffResult(to_insert, empty, prep.db_df)
-            return build_plan(
-                spec.name,
-                spec.sync_mode,
-                spec.primary_key,
-                prep.sync_columns,
-                diff,
-                file_n,
-                db_n,
-                spec.timestamp_columns,
-                spec.immutable_columns,
-            )
+            diff = DiffResult(prep.file_rows, empty, prep.db_df)
         return build_plan(
             spec.name,
             spec.sync_mode,
             spec.primary_key,
             prep.sync_columns,
-            prep.diff,
+            diff,
             0 if prep.file_empty else prep.file_df.count(),
             prep.db_df.count(),
             spec.timestamp_columns,
@@ -251,18 +238,11 @@ class Syncer:
                     spec = prep.spec
                     stats = outcome.stats[name]
                     if spec.sync_mode == SYNC_MODE_OVERWRITE:
-                        df = (
-                            prep.file_df.select(
-                                *[c for c in prep.sync_columns if c in prep.file_df.columns]
-                            )
-                            if not prep.file_empty
-                            else prep.db_df.limit(0)
-                        )
                         ow = overwrite_table(
                             self.backend,
                             spec.name,
                             prep.sync_columns if not prep.file_empty else [],
-                            df,
+                            prep.file_rows,
                             spec.timestamp_columns,
                         )
                         stats.inserted = ow.inserted
@@ -301,17 +281,7 @@ class Syncer:
                 spec = prep.spec
                 empty = prep.db_df.limit(0)
                 if spec.sync_mode == SYNC_MODE_OVERWRITE:
-                    to_insert = (
-                        prep.file_df.select(
-                            *[
-                                c
-                                for c in prep.sync_columns
-                                if c in prep.file_df.columns
-                            ]
-                        )
-                        if not prep.file_empty
-                        else empty
-                    )
+                    to_insert = prep.file_rows
                     to_update, to_delete = empty, empty
                 else:
                     to_insert = prep.diff.to_insert

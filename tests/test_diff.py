@@ -278,41 +278,26 @@ class TestPrunedDiffCounts:
             full["delete"],
         )
 
-    @pytest.mark.parametrize("threshold", ["0", str(1 << 40)])
-    def test_pin_and_recompute_paths_identical(self, spark, threshold):
-        """The size-adaptive strategy switch (r15) is execution-only:
-        the pin path (threshold 0 forces every input over it) and the
-        recompute path (huge threshold) must count identically,
-        including the all-buckets-pruned zero edge."""
-        from mydatasyncer_spark.operators.diff import (
-            PRUNE_PIN_THRESHOLD_CONF,
-            diff_counts_pruned,
-        )
+    def test_classification_reads_the_pinned_frames(self, spark):
+        """The one pruned-diff path: both sides are pinned with
+        localCheckpoint, and the classification join reads those two
+        pinned frames (lineage truncated — no source scan below it),
+        pruned by an IN-filter on the collected bucket ids, never by
+        a broadcast left-semi join on the changed-bucket frame."""
+        from mydatasyncer_spark.operators.diff import diff_counts_pruned
 
-        old = spark.conf.get(PRUNE_PIN_THRESHOLD_CONF, None)
-        spark.conf.set(PRUNE_PIN_THRESHOLD_CONF, threshold)
-        try:
-            rows_f = [
-                (i, 1 if i % 50 == 0 else 0)
-                for i in range(400)
-                if i % 17 != 3
-            ]
-            rows_d = [(i, 0) for i in range(400) if i % 13 != 5]
-            f = spark.createDataFrame(rows_f, "id long, v long")
-            d = spark.createDataFrame(rows_d, "id long, v long")
-            full = diff_snapshots(f, d, "id").counts()
-            assert self._as_tuple(
-                diff_counts_pruned(f, d, "id", n_buckets=16)
-            ) == (full["insert"], full["update"], full["delete"])
-            same = spark.createDataFrame(rows_d, "id long, v long")
-            assert self._as_tuple(
-                diff_counts_pruned(d, same, "id", n_buckets=16)
-            ) == (0, 0, 0)
-        finally:
-            if old is None:
-                spark.conf.unset(PRUNE_PIN_THRESHOLD_CONF)
-            else:
-                spark.conf.set(PRUNE_PIN_THRESHOLD_CONF, old)
+        f = spark.createDataFrame(
+            [(i, 9 if i == 7 else i % 3) for i in range(200)], "id long, v long"
+        )
+        d = spark.createDataFrame(
+            [(i, i % 3) for i in range(200)], "id long, v long"
+        )
+        out = diff_counts_pruned(f, d, "id", n_buckets=16)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Scan ExistingRDD") == 2, plan
+        assert "LocalTableScan" not in plan, plan
+        assert "LeftSemi" not in plan and "BroadcastHashJoin" not in plan, plan
+        assert self._as_tuple(out) == (0, 1, 0)
 
     def test_duplicated_pair_swap_is_detected(self, spark):
         """The r14-sweep blind spot, closed in r15: XOR self-cancels

@@ -18,6 +18,42 @@ def _parquet_files(path: str) -> list[str]:
     return glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
 
 
+class TestIdBucketLayout:
+    """The one id-bucket layout rule every store rewrite shares."""
+
+    def test_no_list_partitions_by_id_bucket_when_present(self):
+        from mydatasyncer_spark.operators.dedup import (
+            ID_BUCKET_COL,
+            id_bucket_layout,
+        )
+
+        assert id_bucket_layout(["doc_id", ID_BUCKET_COL]) == [ID_BUCKET_COL]
+        assert id_bucket_layout(["doc_id"]) == []
+
+    def test_list_without_id_bucket_gets_it_appended(self):
+        from mydatasyncer_spark.operators.dedup import (
+            ID_BUCKET_COL,
+            id_bucket_layout,
+        )
+
+        cols = ["bucket", "neighbor_id", ID_BUCKET_COL]
+        assert id_bucket_layout(cols, ["bucket"]) == ["bucket", ID_BUCKET_COL]
+        assert id_bucket_layout(["bucket", "neighbor_id"], ["bucket"]) == [
+            "bucket"
+        ]
+
+    def test_list_with_id_bucket_is_kept(self):
+        from mydatasyncer_spark.operators.dedup import (
+            ID_BUCKET_COL,
+            id_bucket_layout,
+        )
+
+        parts = [ID_BUCKET_COL, "bucket"]
+        cols = ["bucket", "neighbor_id", ID_BUCKET_COL]
+        assert id_bucket_layout(cols, parts) == parts
+        assert parts == [ID_BUCKET_COL, "bucket"]  # caller's list untouched
+
+
 class TestCompactTable:
     def test_full_row_dedupe_and_file_shrink(self, spark, tmp_path):
         from mydatasyncer_spark.operators.maintenance import compact_table

@@ -422,6 +422,51 @@ class TestTimestampInjection:
         conn.close()
 
 
+class TestSqliteTimestampRoundTrip:
+    def test_resync_of_same_file_updates_nothing(self, spark, tmp_path):
+        """Timestamps the engine writes into sqlite must read back equal
+        to the file's canonical form: re-syncing an unchanged file is a
+        no-op, not a rewrite of every row the first sync touched."""
+        conn = sqlite3.connect(":memory:")
+        conn.execute(
+            "CREATE TABLE ev (id INTEGER PRIMARY KEY, name TEXT, ts TEXT)"
+        )
+        conn.execute("INSERT INTO ev VALUES (1, 'old', '2024-01-05T10:00:00Z')")
+        conn.commit()
+        path = write_csv(
+            tmp_path,
+            "ev.csv",
+            "id,name,ts\n"
+            "1,new,2024-01-05T10:00:00Z\n"
+            "2,added,1995-06-28T23:59:59Z\n",
+        )
+        cfg = SyncConfig(
+            tables=[TableSpec(name="ev", file_path=path, primary_key="id")]
+        )
+        first = sync(spark, DbApiBackend(conn), cfg).stats["ev"]
+        assert (first.inserted, first.updated) == (1, 1)
+        assert rows(conn, "ev") == [
+            (1, "new", "2024-01-05T10:00:00Z"),
+            (2, "added", "1995-06-28T23:59:59Z"),
+        ]
+        second = sync(spark, DbApiBackend(conn), cfg).stats["ev"]
+        assert (second.inserted, second.updated, second.deleted) == (0, 0, 0)
+        conn.close()
+
+    def test_only_datetimes_are_rebound(self):
+        import datetime
+
+        from mydatasyncer_spark.sinks.applier import _sqlite_value
+
+        aware = datetime.datetime(
+            2024, 1, 5, 12, 0, 0, 123456,
+            tzinfo=datetime.timezone(datetime.timedelta(hours=2)),
+        )
+        assert _sqlite_value(aware) == "2024-01-05T10:00:00Z"
+        for v in ("NOW", 7, 1.5, None, datetime.date(2024, 1, 5)):
+            assert _sqlite_value(v) == v
+
+
 def test_global_timeout_enforced(spark, db, tmp_path):
     """O12: a run past its deadline aborts with SyncError before any
     writes (ref: 5-minute deadline, main.go:60-62)."""
