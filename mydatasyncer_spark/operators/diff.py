@@ -2,30 +2,37 @@
 
 ``diffData`` (ref: dbsync.go:762-780) iterates file records and
 probes a driver-RAM hash map of the DB snapshot. Re-expressed
-Spark-first, that dataflow is three declarative joins on a
-canonicalized primary-key column:
+Spark-first, that dataflow is ONE full-outer join on a canonicalized
+primary-key column whose rows are classified and then split three
+ways (:func:`diff_changes`, :func:`diff_snapshots`):
 
-- **insert**  = file LEFT ANTI db      (ref: dbsync.go:731-733, J2)
-- **update**  = file INNER db, any column differs in canonical string
-  space (ref: dbsync.go:734-739 + compareRecords 695-715, J3)
-- **delete**  = db LEFT ANTI file, gated on ``delete_not_in_file``
-  (ref: findRecordsToDelete, dbsync.go:746-758, J4)
+- **insert**  = file row with no DB match   (ref: dbsync.go:731-733, J2)
+- **update**  = matched pair whose canonical string tuples differ
+  (ref: dbsync.go:734-739 + compareRecords 695-715, J3)
+- **delete**  = DB row with no file match, gated on
+  ``delete_not_in_file`` (ref: findRecordsToDelete, dbsync.go:746-758, J4)
+
+An unmatched outer row is exactly a left-anti row and a matched pair
+exactly an inner-join row, so the split equals the three single-leg
+joins (:func:`detect_inserts`, :func:`detect_updates`,
+:func:`detect_deletes`, kept for single-leg consumers) for duplicate
+and NULL keys too. A caller that pulls all three legs pins the one
+classified frame (:meth:`DiffResult.pin`) and the legs read it,
+instead of each leg rescanning both snapshots.
 
 Cross-type key equality (JSON ``123`` == DB ``"123"``, ref:
 dbsync.go:28-48, J5) comes from joining on ``canonical_str(pk)``
 rather than the raw column.
 
-Scale notes: all three joins share the same join key, so at 100 TB
-they hash-partition identically and AQE can reuse the shuffle; a
-small DB side gets broadcast automatically (autoBroadcastJoinThreshold
-/ AQE local-join conversion). Nothing is materialized on the driver.
+Scale notes: one exchange per side on the canonical key; nothing is
+materialized on the driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +42,10 @@ from mydatasyncer_spark.operators.partitioning import ensure_min_parallelism
 
 _KEY = "_pk_canon"
 BEFORE_COL = "_before"
+#: classification label column of :func:`diff_changes`
+KIND_COL = "_kind"
+#: after-image struct column of :func:`diff_changes` (NULL for deletes)
+AFTER_COL = "_after"
 
 
 @dataclass
@@ -44,11 +55,55 @@ class DiffResult:
     ``to_update`` carries the *after* (file-side) values in the sync
     columns plus a ``_before`` struct with the DB-side values
     (ref: UpdateOperation, dbsync.go:132-135).
+
+    ``changes`` is the classified :func:`diff_changes` frame the legs
+    project (None for a hand-built triple).
     """
 
     to_insert: DataFrame
     to_update: DataFrame
     to_delete: DataFrame
+    changes: DataFrame | None = None
+    _pinned: bool = field(default=False, repr=False)
+
+    @classmethod
+    def of_changes(
+        cls, changes: DataFrame, delete_not_in_file: bool = True
+    ) -> "DiffResult":
+        """The triple as projections of one classified frame:
+        insert = ``_after.*``, update = ``_after.*`` + ``_before``,
+        delete = ``_before.*`` — the same names, types and order as
+        the single-leg joins. With deletes gated off the delete leg
+        is an empty relation (no job when pulled)."""
+
+        def kind(k: str) -> DataFrame:
+            return changes.filter(F.col(KIND_COL) == k)
+
+        to_delete = kind("delete").select(f"{BEFORE_COL}.*")
+        return cls(
+            kind("insert").select(f"{AFTER_COL}.*"),
+            kind("update").select(f"{AFTER_COL}.*", BEFORE_COL),
+            to_delete if delete_not_in_file else to_delete.limit(0),
+            changes,
+        )
+
+    def pin(self) -> "DiffResult":
+        """Materialize ``changes`` once (eager ``localCheckpoint``:
+        executor blocks, not replicated) and re-project the legs from
+        it, so pulling all three legs reads the pin instead of running
+        the join three times. Release with :meth:`release`."""
+        pinned = DiffResult.of_changes(self.changes.localCheckpoint(eager=True))
+        pinned._pinned = True
+        return pinned
+
+    def release(self) -> None:
+        """Free the blocks :meth:`pin` materialized (no-op otherwise).
+        ``DataFrame.unpersist`` only drops cache-manager entries, so
+        the checkpoint's own RDD is unpersisted."""
+        if self._pinned:
+            self.changes._jdf.queryExecution().analyzed().rdd().unpersist(
+                False
+            )
 
     def counts(self) -> dict[str, int]:
         return {
@@ -85,19 +140,6 @@ def detect_deletes(
     d = with_canonical_key(db_df, primary_key)
     f = with_canonical_key(file_df, primary_key).select(_KEY)
     return d.join(f, _KEY, "left_anti").drop(_KEY)
-
-
-def row_differs(
-    file_df: DataFrame, db_df: DataFrame, columns: list[str]
-) -> Column:
-    """Canonical-string row inequality over ``columns`` (J3 predicate).
-
-    Compares via per-side 64-bit fingerprints of the canonical string
-    tuple — one xxhash64 each side instead of an OR-chain of N
-    null-safe comparisons, which keeps the predicate cheap and
-    codegen-friendly at wide schemas.
-    """
-    return row_fingerprint(file_df, columns) != row_fingerprint(db_df, columns)
 
 
 def detect_updates(
@@ -151,12 +193,12 @@ def diff_counts(
 ) -> DataFrame:
     """One-pass plan counts (the dry-run's J1 in its cheapest form).
 
-    Where :func:`diff_snapshots` builds three joins (fine when the
-    legs themselves are needed), the counts triple only needs row
-    *classification* — so this is a single full-outer join in which
-    each side is pre-collapsed to ``(canonical_key, row_fingerprint)``.
-    Two narrow shuffles instead of six wide scans; at 100 TB the
-    shuffle payload drops from every sync column to 16 bytes/row.
+    Where :func:`diff_snapshots` carries every sync column through its
+    join (the legs themselves are needed), the counts triple only
+    needs row *classification* — so each side is pre-collapsed to
+    ``(canonical_key, row_fingerprint)`` before the full-outer join;
+    at 100 TB the shuffle payload drops from every sync column to
+    16 bytes/row.
     Returns a one-row DataFrame ``(n_insert, n_update, n_delete)``.
     """
     if columns is None:
@@ -191,12 +233,6 @@ def _classify_counts(
     )
 
 
-#: classification label column of :func:`diff_changes`
-KIND_COL = "_kind"
-#: after-image struct column of :func:`diff_changes` (NULL for deletes)
-AFTER_COL = "_after"
-
-
 def diff_changes(
     file_df: DataFrame,
     db_df: DataFrame,
@@ -206,16 +242,15 @@ def diff_changes(
     delete_not_in_file: bool = True,
 ) -> DataFrame:
     """One-pass classified change rows — the row-level twin of
-    :func:`diff_counts`.
+    :func:`diff_counts`, and the frame :func:`diff_snapshots` splits
+    into its three legs.
 
-    Where :func:`diff_snapshots` answers "give me the three legs" with
-    three wide joins (each rescanning both snapshots), many consumers
-    only need *which rows changed and how* plus a few payload columns
-    (IVM delta derivation, affected-key scopes, SCD2 maintenance). For
-    those, one full-outer join over ``(canonical_key, row_fingerprint,
-    payload...)`` classifies every row in a single narrow pass: at
-    100 TB the exchange carries 16 bytes + the payload per row, once,
-    instead of every sync column three-to-five times.
+    One full-outer join over ``(canonical_key, row_fingerprint,
+    payload...)`` classifies every row in a single pass. Consumers
+    that only need *which rows changed and how* plus a few payload
+    columns (IVM delta derivation, affected-key scopes, SCD2
+    maintenance) pass a narrow ``payload``: at 100 TB the exchange
+    then carries 16 bytes + the payload per row, once.
 
     Returns one row per changed key with:
 
@@ -226,12 +261,14 @@ def diff_changes(
       (NULL struct for inserts)
 
     ``payload`` defaults to all sync ``columns``. Update detection is
-    the same canonical fingerprint inequality as :func:`row_differs`
-    (same collision trade-off). Unchanged rows never leave the join.
+    inequality of the per-side :func:`row_fingerprint` (one xxhash64
+    of the canonical string tuple per side instead of an OR-chain of
+    N null-safe comparisons; a 64-bit collision hides an update).
+    Unchanged rows never leave the join.
 
-    Assumes the primary key is unique per side (the snapshot
-    contract; duplicate keys would classify per joined PAIR where the
-    leg-wise triple classifies per row).
+    Duplicate and NULL keys classify exactly like the single-leg
+    joins: an unmatched row (NULL keys never match) is one insert or
+    delete row, and every matched pair is one update candidate.
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
@@ -408,8 +445,8 @@ def changed_buckets(
     ``(count, xor, exact sum)`` over its row fingerprints, computed
     in one narrow scan (see :func:`_changed_bucket_ids`). A bucket
     matching on all three statistics is declared unchanged. The
-    triple shares the fingerprint trade-off already documented on
-    :func:`row_differs`: a change pattern colliding on count AND xor
+    triple shares the fingerprint trade-off of
+    :func:`row_fingerprint`: a change pattern colliding on count AND xor
     AND exact sum goes unseen — hash-collision-class odds.
 
     ``bucket_fn`` overrides the default key-hash bucketing with any
@@ -445,14 +482,14 @@ def diff_snapshots_pruned(
     delete_not_in_file: bool = True,
     bucket_fn: "Callable[[DataFrame], Column] | None" = None,
 ) -> DiffResult:
-    """:func:`diff_snapshots`, but the three wide joins only read the
-    key-hash buckets whose fingerprints changed.
+    """:func:`diff_snapshots`, but the classification join only reads
+    the key-hash buckets whose fingerprints changed.
 
     Why this matters at 100 TB: a daily sync typically touches a tiny
     fraction of rows, yet the full diff still shuffles BOTH entire
     snapshots into the join. The bucket-fingerprint pre-pass costs one
     narrow scan per side (16 bytes/row into a map-side partial agg,
-    ``n_buckets`` rows out) and then the wide joins run over only the
+    ``n_buckets`` rows out) and then the wide join runs over only the
     changed slice — with unchanged data never entering an exchange.
     When the snapshots are *stored* bucketed on the same key hash
     (``sources/writers.write_partitioned`` on :func:`bucket_col`), the
@@ -472,12 +509,10 @@ def diff_snapshots_pruned(
         file_p, db_p, primary_key, columns, n_buckets, bucket_fn
     )
     if not buckets:
-        empty = DiffResult(
-            file_p.limit(0),
-            detect_updates(file_p.limit(0), db_p.limit(0), primary_key, columns),
-            db_p.limit(0),
+        file_p, db_p = file_p.limit(0), db_p.limit(0)
+        return diff_snapshots(
+            file_p, db_p, primary_key, columns, delete_not_in_file
         )
-        return empty
     fb = file_p.filter(bucket_fn(file_p).isin(buckets))
     db = db_p.filter(bucket_fn(db_p).isin(buckets))
     return diff_snapshots(fb, db, primary_key, columns, delete_not_in_file)
@@ -490,20 +525,22 @@ def diff_snapshots(
     columns: list[str] | None = None,
     delete_not_in_file: bool = True,
 ) -> DiffResult:
-    """Full diff (J1): insert/update/delete triple over sync columns.
+    """Full diff (J1): insert/update/delete triple over sync columns,
+    each leg a projection of one :func:`diff_changes` full-outer join
+    (see :meth:`DiffResult.of_changes`). Pulled unpinned, every leg
+    re-runs that join; :meth:`DiffResult.pin` runs it once.
 
-    When ``delete_not_in_file`` is false the delete leg is an empty
-    DataFrame and the J4 join is never built at all (the reference
-    gates it the same way, ref: dbsync.go:746-749).
+    When ``delete_not_in_file`` is false no row classifies as a
+    delete and the delete leg is an empty relation (the reference
+    gates J4 the same way, ref: dbsync.go:746-749).
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
-    file_p = file_df.select(*columns)
-    db_p = db_df.select(*columns)
-    to_insert = detect_inserts(file_p, db_p, primary_key)
-    to_update = detect_updates(file_p, db_p, primary_key, columns)
-    if delete_not_in_file:
-        to_delete = detect_deletes(file_p, db_p, primary_key)
-    else:
-        to_delete = db_p.limit(0)
-    return DiffResult(to_insert, to_update, to_delete)
+    changes = diff_changes(
+        file_df,
+        db_df,
+        primary_key,
+        columns,
+        delete_not_in_file=delete_not_in_file,
+    )
+    return DiffResult.of_changes(changes, delete_not_in_file)

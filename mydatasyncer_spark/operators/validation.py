@@ -4,9 +4,11 @@ The reference runs a mandatory single-pass validator before diff sync
 (ref: primary_key_validator.go:57-136): missing column, null/empty
 (with a null-token list), duplicates, and format lint (line breaks,
 tabs, length cap, untrimmed whitespace). Re-expressed as one
-DataFrame pass that attaches a ``reason`` column, plus aggregates for
-the report — fully distributed, no driver materialization beyond the
-10-sample listing.
+DataFrame pass that attaches a ``reason`` column
+(:func:`annotate_issues`), while the report's histogram comes from one
+two-level aggregate over the keys (:func:`validate_primary_keys`) —
+fully distributed, no driver materialization beyond the 10-row
+failure listings.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mydatasyncer_spark.errors import ValidationError
-from mydatasyncer_spark.functions.canonical import is_nullish
+from mydatasyncer_spark.functions.canonical import canonical_col, is_nullish
 
 MAX_KEY_LENGTH = 255  # ref: primary_key_validator.go:37-53
 SAMPLE_LIMIT = 10  # ref: primary_key_validator.go:248-263
@@ -117,31 +119,72 @@ def validate_primary_keys(
     max_length: int = MAX_KEY_LENGTH,
 ) -> ValidationReport:
     """Run the validator; in strict mode raise on any invalid record
-    (ref: ValidateAllRecords, primary_key_validator.go:57-136)."""
-    annotated = annotate_issues(df, primary_key, max_length)
-    agg = (
-        annotated.groupBy("reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_reason = {r["reason"]: r["n"] for r in agg if r["reason"] is not None}
-    total = sum(r["n"] for r in agg)
+    (ref: ValidateAllRecords, primary_key_validator.go:57-136).
+
+    The histogram is one two-level aggregate, equal to the one
+    :func:`annotate_issues` implies: per string-cast key, ``n`` rows;
+    then ``total`` = Σn, ``null_or_empty`` = Σn over nullish keys,
+    ``duplicate`` = Σ(n−1) over the rest (every occurrence after the
+    first), and each format reason counts the non-nullish keys it hits
+    (format depends only on the key, and only a key's first occurrence
+    reaches the format check). Clean input runs nothing else; the
+    duplicate-key and sample listings run only when ``invalid > 0``.
+    Samples are ordered by (reason, canonical key) before the limit so
+    the report is deterministic; nullish keys are never listed as
+    duplicate keys (the reference's first-seen map holds only
+    non-null keys, ref: primary_key_validator.go:96-106).
+    """
+    has_key = primary_key in df.columns
+    if not has_key:
+        total = df.count()
+        by_reason = {R_MISSING: total} if total else {}
+    else:
+        per_key = df.groupBy(
+            F.col(primary_key).cast("string").alias("key")
+        ).agg(F.count(F.lit(1)).alias("n"))
+        per_key = per_key.withColumn("_nullish", is_nullish(F.col("key")))
+        issue = format_issue(F.col("key"), max_length)
+        clean = ~F.col("_nullish")
+
+        def total_of(value: Column, name: str) -> Column:
+            return F.coalesce(F.sum(value), F.lit(0)).cast("bigint").alias(name)
+
+        fmt_reasons = [R_LINEBREAK, R_TAB, R_TOO_LONG, R_UNTRIMMED]
+        row = per_key.agg(
+            total_of(F.col("n"), "total"),
+            total_of(F.when(F.col("_nullish"), F.col("n")), R_NULLISH),
+            total_of(F.when(clean, F.col("n") - 1), R_DUPLICATE),
+            *[
+                total_of(F.when(clean & (issue == r), F.lit(1)), r)
+                for r in fmt_reasons
+            ],
+        ).first()
+        total = row["total"]
+        by_reason = {
+            r: row[r]
+            for r in [R_NULLISH, R_DUPLICATE, *fmt_reasons]
+            if row[r]
+        }
     invalid = sum(by_reason.values())
-    dup_rows = []
-    if primary_key in df.columns:
-        dup_rows = (
-            df.groupBy(F.col(primary_key).cast("string").alias("key"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter("n > 1")
-            .orderBy(F.desc("n"), "key")
+    dup_rows, samples = [], []
+    if invalid:
+        if has_key:
+            dup_rows = (
+                per_key.filter((F.col("n") > 1) & clean)
+                .orderBy(F.desc("n"), "key")
+                .limit(SAMPLE_LIMIT)
+                .collect()
+            )
+        annotated = annotate_issues(df, primary_key, max_length)
+        order = [F.col("reason")]
+        if has_key:
+            order.append(canonical_col(df, primary_key))
+        samples = (
+            annotated.filter(F.col("reason").isNotNull())
+            .orderBy(*order)
             .limit(SAMPLE_LIMIT)
             .collect()
         )
-    samples = (
-        annotated.filter(F.col("reason").isNotNull())
-        .limit(SAMPLE_LIMIT)
-        .collect()
-    )
     report = ValidationReport(
         total=total,
         invalid=invalid,

@@ -20,6 +20,7 @@ materialized on the driver.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -179,8 +180,16 @@ def coerce_rfc3339(df: DataFrame, columns: list[str] | None = None) -> DataFrame
 
 def validate_file_paths(paths: list[str]) -> None:
     """Upfront existence check before any work
-    (ref: ValidateFilePaths, loader.go:281-288)."""
-    missing = [p for p in paths if not os.path.exists(p)]
+    (ref: ValidateFilePaths, loader.go:281-288). A path passes when it
+    exists (a file or a dataset directory) or is a glob pattern with at
+    least one match; a scheme-qualified URI (``s3a://``, ``hdfs://``)
+    is left to the reader, since only the local filesystem is checked
+    here."""
+    missing = [
+        p
+        for p in paths
+        if "://" not in p and not os.path.exists(p) and not glob.glob(p)
+    ]
     if missing:
         raise SyncError(f"missing input files: {missing!r}")
 

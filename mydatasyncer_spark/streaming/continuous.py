@@ -72,9 +72,7 @@ def sync_batch(
         columns=cols,
         delete_not_in_file=spec.delete_not_in_file,
     )
-    diff.to_insert.persist()
-    diff.to_update.persist()
-    diff.to_delete.persist()
+    diff = diff.pin()
     try:
         with Transaction(backend.conn):
             return apply_diff(
@@ -89,9 +87,7 @@ def sync_batch(
                 immutable_columns=spec.immutable_columns,
             )
     finally:
-        diff.to_insert.unpersist()
-        diff.to_update.unpersist()
-        diff.to_delete.unpersist()
+        diff.release()
 
 
 def continuous_merge(
@@ -874,6 +870,7 @@ def continuous_ann_index(
     from mydatasyncer_spark.operators.dedup import (
         ID_BUCKET_COL,
         _id_bucket_modulus,
+        id_bucket_layout,
         id_bucketed_index,
     )
     from mydatasyncer_spark.operators.similarity import (
@@ -928,10 +925,9 @@ def continuous_ann_index(
         if batch.isEmpty():
             return
         idx = ivf_index(batch, dim, n_centroids, id_col, vec_col, use_cens)
-        parts = ["bucket"]
         if idx_nb is not None:
             idx = id_bucketed_index(idx, "neighbor_id", idx_nb)
-            parts.append(ID_BUCKET_COL)
+        parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
     writer = (
@@ -1007,6 +1003,7 @@ def continuous_pq_index(
     from mydatasyncer_spark.operators.dedup import (
         ID_BUCKET_COL,
         _id_bucket_modulus,
+        id_bucket_layout,
         id_bucketed_index,
     )
     from mydatasyncer_spark.operators.similarity import (
@@ -1092,10 +1089,9 @@ def continuous_pq_index(
             centroids=use_cens,
             residual=use_residual,
         )
-        parts = ["bucket"]
         if idx_nb is not None:
             idx = id_bucketed_index(idx, "neighbor_id", idx_nb)
-            parts.append(ID_BUCKET_COL)
+        parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
     writer = (
@@ -1150,6 +1146,7 @@ def continuous_lsh_index(
     from mydatasyncer_spark.operators.dedup import (
         ID_BUCKET_COL,
         _id_bucket_modulus,
+        id_bucket_layout,
         id_bucketed_index,
     )
     from mydatasyncer_spark.operators.similarity import (
@@ -1192,10 +1189,9 @@ def continuous_lsh_index(
         if batch.isEmpty():
             return
         idx = lsh_index(batch, dim, use_planes, id_col, vec_col)
-        parts = ["bucket"]
         if idx_nb is not None:
             idx = id_bucketed_index(idx, "neighbor_id", idx_nb)
-            parts.append(ID_BUCKET_COL)
+        parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
     writer = (
@@ -1282,6 +1278,7 @@ def continuous_semantic_dedup(
     from mydatasyncer_spark.operators.dedup import (
         ID_BUCKET_COL,
         _id_bucket_modulus,
+        id_bucket_layout,
         id_bucketed_index,
     )
     from mydatasyncer_spark.operators.similarity import (
@@ -1384,12 +1381,11 @@ def continuous_semantic_dedup(
             idx_rows = ivf_index(
                 survivors, dim, n_centroids, id_col, vec_col, use_cens
             )
-            parts = ["bucket"]
             if idx_nb is not None:
                 idx_rows = id_bucketed_index(
                     idx_rows, "neighbor_id", idx_nb
                 )
-                parts.append(ID_BUCKET_COL)
+            parts = id_bucket_layout(idx_rows.columns, ["bucket"])
             idx_rows.write.mode("append").partitionBy(*parts).parquet(
                 index_path
             )

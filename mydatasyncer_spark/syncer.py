@@ -5,12 +5,17 @@ The lifecycle mirrors the reference's EP1/EP2 entry points
 every data-heavy step and the driver sequencing only the transactional
 writes:
 
+0. check every table's input path exists, before any Spark or DB work
+   (S4, ref: ValidateFilePaths, loader.go:281-288);
 1. load file snapshots (lazy DataFrames — *all* tables resolved before
    the transaction opens, ref: dbsync.go:936-951);
-2. strict PK validation for diff-mode tables (V1);
+2. strict PK validation for diff-mode tables (V1) — its row total is
+   also the empty-file test and the dry-run's file row count;
 3. resolve sync columns per table (P4/P5);
-4. compute diff triples (J2-J4), persisted so the write transaction
-   never waits on a recomputation;
+4. compute each diff as ONE classified full-outer join (J2-J4) and
+   pin it once (``DiffResult.pin``); the insert/update/delete legs
+   are projections of the pin, so the write transaction never waits
+   on a recomputation and no leg rescans the snapshots;
 5. dry-run → build plans and stop, zero writes (O8);
 6. else apply: single table in insert→update→delete order inside one
    transaction; multi-table in two phases inside ONE global
@@ -58,7 +63,11 @@ from mydatasyncer_spark.sinks.applier import (
     overwrite_table,
     stage_legs,
 )
-from mydatasyncer_spark.sources.readers import coerce_rfc3339, read_file
+from mydatasyncer_spark.sources.readers import (
+    coerce_rfc3339,
+    read_file,
+    validate_file_paths,
+)
 
 
 @dataclass
@@ -79,6 +88,8 @@ class _Prepared:
     db_df: DataFrame
     diff: DiffResult | None
     file_empty: bool
+    #: file row total from diff-mode validation (None in overwrite mode)
+    file_count: int | None = None
 
     @property
     def file_rows(self) -> DataFrame:
@@ -127,7 +138,16 @@ class Syncer:
         """Steps 1-4 for one table — everything distributed, nothing
         inside the write transaction."""
         file_df = coerce_rfc3339(read_file(self.spark, spec.file_path))
-        file_empty = file_df.isEmpty()
+        file_count = None
+        if spec.sync_mode == SYNC_MODE_DIFF:
+            # an empty file validates clean; its total doubles as the
+            # emptiness test, so no separate probe job runs
+            file_count = validate_primary_keys(
+                file_df, spec.primary_key, strict=True
+            ).total
+            file_empty = file_count == 0
+        else:
+            file_empty = file_df.isEmpty()
         db_cols = self.backend.table_columns(spec.name)
         cols = determine_sync_columns(
             file_cols=[] if file_empty else file_df.columns,
@@ -135,10 +155,10 @@ class Syncer:
             config_cols=spec.columns,
             primary_key=spec.primary_key,
         )
-        if spec.sync_mode == SYNC_MODE_DIFF and not file_empty:
-            validate_primary_keys(file_df, spec.primary_key, strict=True)
         db_df = self.backend.read_snapshot(self.spark, spec.name, cols)
-        prep = _Prepared(spec, cols, file_df, db_df, None, file_empty)
+        prep = _Prepared(
+            spec, cols, file_df, db_df, None, file_empty, file_count
+        )
         if spec.sync_mode == SYNC_MODE_DIFF:
             if spec.prune_buckets > 0:
                 diff = diff_snapshots_pruned(
@@ -157,11 +177,8 @@ class Syncer:
                     columns=cols,
                     delete_not_in_file=spec.delete_not_in_file,
                 )
-            # persist: the write tx must not re-trigger the scan/join
-            diff.to_insert.persist()
-            diff.to_update.persist()
-            diff.to_delete.persist()
-            prep.diff = diff
+            # pin: the write tx must not re-trigger the scan/join
+            prep.diff = diff.pin()
         return prep
 
     def _plan_for(self, prep: _Prepared) -> ExecutionPlan:
@@ -171,13 +188,16 @@ class Syncer:
             # overwrite plan = delete-all + insert-all (ref: dbsync.go:359-370)
             empty = prep.db_df.limit(0)
             diff = DiffResult(prep.file_rows, empty, prep.db_df)
+        n_file = prep.file_count
+        if n_file is None:
+            n_file = 0 if prep.file_empty else prep.file_df.count()
         return build_plan(
             spec.name,
             spec.sync_mode,
             spec.primary_key,
             prep.sync_columns,
             diff,
-            0 if prep.file_empty else prep.file_df.count(),
+            n_file,
             prep.db_df.count(),
             spec.timestamp_columns,
             spec.immutable_columns,
@@ -191,6 +211,7 @@ class Syncer:
         graph = DependencyGraph(deps)
         insert_order, delete_order = graph.sync_order()
         specs = {t.name: t for t in self.config.tables}
+        validate_file_paths([t.file_path for t in self.config.tables])
 
         # Phase 0: prepare everything outside the transaction
         prepared: dict[str, _Prepared] = {}
@@ -201,7 +222,7 @@ class Syncer:
         if self.config.dry_run:
             for name in insert_order:
                 outcome.plans[name] = self._plan_for(prepared[name])
-            self._unpersist(prepared)
+            self._release(prepared)
             return outcome
 
         if self.staging:
@@ -260,7 +281,7 @@ class Syncer:
                     )
                     stats.inserted, stats.updated = part.inserted, part.updated
         finally:
-            self._unpersist(prepared)
+            self._release(prepared)
         return outcome
 
     def _run_staged(
@@ -329,16 +350,14 @@ class Syncer:
         finally:
             for legs in staged.values():
                 drop_staged(self.backend, legs)
-            self._unpersist(prepared)
+            self._release(prepared)
         return outcome
 
     @staticmethod
-    def _unpersist(prepared: dict[str, _Prepared]) -> None:
+    def _release(prepared: dict[str, _Prepared]) -> None:
         for prep in prepared.values():
             if prep.diff is not None:
-                prep.diff.to_insert.unpersist()
-                prep.diff.to_update.unpersist()
-                prep.diff.to_delete.unpersist()
+                prep.diff.release()
 
 
 def sync(

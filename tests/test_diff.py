@@ -91,6 +91,76 @@ def test_column_subset_diff(spark, snapshots):
     assert [r["id"] for r in result.to_insert.collect()] == [4]
 
 
+class TestClassifiedTriple:
+    """diff_snapshots splits ONE classified full-outer join; its legs
+    must equal the single-leg anti/inner joins row for row (duplicate
+    and NULL keys included), and a pinned triple reads only the pin."""
+
+    @staticmethod
+    def _rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    @staticmethod
+    def _shape(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    def test_legs_equal_single_leg_joins_on_random_frames(self, spark):
+        import random
+
+        def frame(rng):
+            rows = [
+                (
+                    None if rng.random() < 0.1 else rng.randint(0, 12),
+                    rng.choice(["a", "b", None]),
+                    rng.randint(0, 2),
+                )
+                for _ in range(rng.randint(10, 30))
+            ]
+            return spark.createDataFrame(rows, "id long, s string, v int")
+
+        cols = ["id", "s", "v"]
+        for seed in range(3):
+            rng = random.Random(seed)
+            f, d = frame(rng), frame(rng)
+            got = diff_snapshots(f, d, "id")
+            want = {
+                "insert": detect_inserts(f, d, "id"),
+                "update": detect_updates(f, d, "id", cols),
+                "delete": detect_deletes(f, d, "id"),
+            }
+            legs = {
+                "insert": got.to_insert,
+                "update": got.to_update,
+                "delete": got.to_delete,
+            }
+            for leg, df in legs.items():
+                assert self._shape(df) == self._shape(want[leg]), leg
+                assert self._rows(df) == self._rows(want[leg]), (seed, leg)
+
+    def test_pin_serves_every_leg_and_release_frees_it(self, spark, snapshots):
+        file_df, db_df = snapshots
+        pinned = diff_snapshots(file_df, db_df, "id").pin()
+        rdd_id = pinned.changes._jdf.queryExecution().analyzed().rdd().id()
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        assert persistent.containsKey(rdd_id)
+        for leg in (pinned.to_insert, pinned.to_update, pinned.to_delete):
+            plan = leg._jdf.queryExecution().executedPlan().toString()
+            assert "Scan ExistingRDD" in plan and "Join" not in plan, plan
+        assert pinned.counts() == {"insert": 1, "update": 1, "delete": 1}
+        pinned.release()
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
+        assert not persistent.containsKey(rdd_id)
+
+    def test_pinned_delete_gating(self, snapshots):
+        file_df, db_df = snapshots
+        gated = diff_snapshots(file_df, db_df, "id", delete_not_in_file=False)
+        pinned = gated.pin()
+        try:
+            assert pinned.counts() == {"insert": 1, "update": 1, "delete": 0}
+        finally:
+            pinned.release()
+
+
 class TestDiffCounts:
     """diff_counts must classify identically to the three-join
     diff_snapshots — same semantics, one-pass plan."""

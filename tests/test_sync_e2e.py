@@ -493,6 +493,38 @@ def test_global_timeout_enforced(spark, db, tmp_path):
     assert rows(db) == before
 
 
+def test_missing_input_path_fails_before_any_work(spark, db, tmp_path):
+    """S4: every table's input path is checked up front — a missing
+    path raises SyncError naming it and the target is unchanged; a
+    dataset directory and a glob with a match both pass the check."""
+    from mydatasyncer_spark.errors import SyncError
+    from mydatasyncer_spark.sources.readers import validate_file_paths
+
+    def cfg(path):
+        return SyncConfig(
+            tables=[
+                TableSpec(
+                    name="test_table",
+                    file_path=path,
+                    primary_key="id",
+                    sync_mode="diff",
+                    delete_not_in_file=True,
+                )
+            ]
+        )
+
+    missing = str(tmp_path / "nope.csv")
+    before = rows(db)
+    with pytest.raises(SyncError, match="nope.csv"):
+        sync(spark, DbApiBackend(db), cfg(missing))
+    assert rows(db) == before
+
+    write_csv(tmp_path, "data.csv", CSV_DIFF)
+    validate_file_paths([str(tmp_path), str(tmp_path / "*.csv")])
+    with pytest.raises(SyncError, match="none"):
+        validate_file_paths([str(tmp_path / "*.none")])
+
+
 def test_csv_strict_column_count(spark, tmp_path):
     """S1 parity: any row with the wrong field count aborts the read
     (ref: strict per-row count check, loader.go:120-122) — FAILFAST

@@ -227,3 +227,101 @@ class TestEntropyProfilers:
         )
         [r2] = mutual_information(ind, "a", "b").collect()
         assert abs(r2["mi_bits"]) < 1e-6
+
+
+def _jobs_in(spark, group, fn):
+    """Spark jobs ``fn`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSinglePassReport:
+    """The report's histogram is one two-level aggregate over the keys;
+    the failure listings run only on invalid input."""
+
+    def test_samples_ordered_by_reason_then_key(self, spark):
+        """Failure samples are the first SAMPLE_LIMIT invalid rows in
+        (reason, canonical key) order, whatever the partitioning."""
+        from mydatasyncer_spark.operators.validation import R_TAB, SAMPLE_LIMIT
+
+        rows = [(f"k{i:02d} ", i) for i in range(12)]  # untrimmed
+        rows += [(f"k{i:02d}\t", i) for i in range(12)]  # tab
+        rows += [(f"ok{i}", i) for i in range(12)]
+        schema = "id string, n int"
+        want = sorted(
+            [(R_TAB, k) for k, _ in rows if k.endswith("\t")]
+            + [(R_UNTRIMMED, k) for k, _ in rows if k.endswith(" ")]
+        )[:SAMPLE_LIMIT]
+        for parts, seed in ((1, 0), (4, 1), (7, 2)):
+            df = spark.createDataFrame(rows, schema).repartition(parts)
+            df = df.orderBy((df.n * 7919 + seed) % 13)
+            report = validate_primary_keys(df, "id", strict=False)
+            got = [(s["reason"], s["id"]) for s in report.samples]
+            assert got == want, parts
+
+    def test_nullish_keys_are_not_duplicate_keys(self, spark):
+        rows = [("",), ("",), (None,), (None,), ("null",), ("NULL",),
+                ("5",), ("5",), ("6",)]
+        df = spark.createDataFrame(rows, "id string")
+        report = validate_primary_keys(df, "id", strict=False)
+        assert report.duplicate_keys == [("5", 2)]
+        assert report.by_reason == {R_NULLISH: 6, R_DUPLICATE: 1}
+
+    def test_histogram_equals_annotate_issues_on_random_keys(self, spark):
+        """Property: on random dirty keys (null tokens, padding, tabs,
+        line breaks, over-long keys, repeats) the single-pass
+        histogram equals the per-row annotate_issues histogram."""
+        import random
+
+        atoms = ["1", "2", "a", "", " ", "null", " NIL", "N/A\t", "x\ny",
+                 "t\tab", " pad", "pad ", "q" * 256, "7", "Undefined"]
+        for seed in range(4):
+            rng = random.Random(seed)
+            keys = [
+                None if rng.random() < 0.08 else rng.choice(atoms)
+                for _ in range(rng.randint(20, 60))
+            ]
+            df = spark.createDataFrame(
+                [(k, i) for i, k in enumerate(keys)], "id string, i int"
+            )
+            want = {
+                r["reason"]: r["n"]
+                for r in annotate_issues(df, "id")
+                .groupBy("reason")
+                .count()
+                .withColumnRenamed("count", "n")
+                .collect()
+                if r["reason"] is not None
+            }
+            report = validate_primary_keys(df, "id", strict=False)
+            assert report.by_reason == want, (seed, keys)
+            assert report.total == len(keys)
+            assert report.invalid == sum(want.values())
+
+    def test_clean_frame_runs_only_the_two_level_aggregate(self, spark):
+        """Job-count pin: on clean input nothing runs beyond the
+        two-level aggregate (no duplicate-key or sample query)."""
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame(
+            [(str(i), i) for i in range(50)], "id string, v int"
+        )
+
+        def two_level():
+            df.groupBy(F.col("id").cast("string")).count().agg(
+                F.sum("count")
+            ).collect()
+
+        budget = _jobs_in(spark, "pk-two-level-agg", two_level)
+        used = _jobs_in(
+            spark,
+            "pk-validate-clean",
+            lambda: validate_primary_keys(df, "id", strict=True),
+        )
+        assert 1 <= used <= budget, (used, budget)
