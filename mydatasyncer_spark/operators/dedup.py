@@ -25,18 +25,19 @@ no Python UDFs — and every hash routes through the cross-engine
 
 Pin contract (every eager ``localCheckpoint`` in this module): the
 pinned frame is a DERIVED intermediate built and consumed inside ONE
-query — blocks are executor-local and NOT replicated, so an executor
-loss mid-query fails lineage recovery and the query re-runs from the
-parquet source (acceptable: nothing durable depends on the pin;
-streaming-standing state lives in persisted stores instead, see
-streaming/continuous.py). Each site notes its size bound; any pin
+query — blocks are executor-local, NOT replicated, and have no
+lineage to recompute from, so an executor loss mid-query fails the
+job with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and the caller re-runs
+it from the parquet source (acceptable: nothing durable depends on
+the pin; streaming-standing state lives in persisted stores instead,
+see streaming/continuous.py). Each site notes its size bound; any pin
 that can be corpus-sized also names the persisted store that replaces
 it as the standing 100 TB path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, DataFrameWriter
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mydatasyncer_spark.functions.hashing import seeded_hash48
@@ -46,6 +47,7 @@ from mydatasyncer_spark.operators.text import (
     tokens,
 )
 
+from mydatasyncer_spark.operators import staging
 from mydatasyncer_spark.operators.partitioning import (
     fanout_repartition as _fanout_repartition,
 )
@@ -1013,16 +1015,6 @@ def id_bucket_layout(
     return parts
 
 
-def overwrite_writer(
-    df: DataFrame, partition_by: list[str] | None = None
-) -> DataFrameWriter:
-    """``df.write.mode("overwrite")``, partitioned per
-    :func:`id_bucket_layout`."""
-    w = df.write.mode("overwrite")
-    parts = id_bucket_layout(df.columns, partition_by)
-    return w.partitionBy(*parts) if parts else w
-
-
 def id_bucketed_index(
     df: DataFrame, id_col: str = "doc_id", n_id_buckets: int = 64
 ) -> DataFrame:
@@ -1442,90 +1434,73 @@ def containment_inverted_store(
     return rows
 
 
-#: sibling directory holding the staged copy during an in-place
-#: index rewrite (migration / compaction) — see jaccard_restore_staging
-INDEX_STAGING_SUFFIX = "_staging"
+def _stage_compaction(
+    spark,
+    path: str,
+    deduped: DataFrame,
+    raw: int,
+    parts: list[str],
+    restored: bool,
+    files_per_billion_rows: int = 2000,
+) -> dict:
+    """Size a deduplicated store frame and stage it once as a MERGE
+    rewrite of ``path`` — the shared tail of every compaction.
+    ``files_per_billion_rows`` per 1e9 PRE-dedupe rows (``raw``, the
+    count the caller already took), floor 1. A partitioned layout is
+    clustered on its key, so each directory lands few large files
+    instead of one sliver per task; an unpartitioned one coalesces
+    (no extra shuffle) unless it must grow. Returns ``{"rows",
+    "removed_rows", "files", "restored_from_staging"}``."""
+    import math
+
+    n_files = max(1, math.ceil(raw * files_per_billion_rows / 1e9))
+    if parts:
+        sized = deduped.repartition(n_files, *[F.col(c) for c in parts])
+    elif n_files <= int(spark.conf.get("spark.sql.shuffle.partitions")):
+        sized = deduped.coalesce(n_files)
+    else:
+        sized = deduped.repartition(n_files)
+    rows = staging.write(spark, sized, path, staging.MERGE, parts)
+    return {
+        "rows": rows,
+        "removed_rows": raw - rows,
+        "files": n_files,
+        "restored_from_staging": restored,
+    }
 
 
-def _job_succeeded(spark, path: str) -> bool:
-    """The committer's ``_SUCCESS`` marker — a directory whose write
-    JOB finished (task outputs can be visible per-task under
-    v2/direct committers, so mere readability proves nothing)."""
-    from mydatasyncer_spark.sources.writers import _hadoop_fs
-
-    jvm, fs, _ = _hadoop_fs(spark, path)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS"))
-
-
-def _delete_path(spark, path: str) -> None:
-    from mydatasyncer_spark.sources.writers import _hadoop_fs
-
-    _, fs, p = _hadoop_fs(spark, path)
-    fs.delete(p, True)
-
-
-def jaccard_restore_staging(spark, index_path: str) -> bool:
-    """Recover from a crash during an in-place ordered-index rewrite.
-
-    Migration and :func:`jaccard_compact` both stage the new index to
-    ``index_path + INDEX_STAGING_SUFFIX`` (gated on its ``_SUCCESS``
-    marker) BEFORE overwriting the index in place — the overwrite
-    deletes the old files first, so a crash mid-overwrite would
-    otherwise leave a missing/partial index that the stream would
-    mistake for a fresh bootstrap and silently wipe. If a COMPLETE
-    staged copy exists, this rewrites the index from it and removes
-    the staging dir; returns True when a restore happened. Every
-    index writer (the streaming twin, compaction) calls this first,
-    so the staged copy can never go stale against later appends —
-    call it yourself before appending to the index out-of-band.
-    (The generic ``operators/maintenance.restore_staging`` adds a
-    union-merge safety net for writers that skip that discipline;
-    here the discipline is complete across every writer, so this
-    restore stays a plain staged-copy replay.)
-
-    Markers-disabled deployments: with ``_SUCCESS`` files suppressed
-    the marker gate never opens, so the fallback restores whenever
-    the staging dir is READABLE and the index itself is
-    unreadable/absent. That combination only arises from a crash
-    mid-overwrite (the rewrite protocol completes staging BEFORE it
-    deletes a single index file — a crash mid-STAGING leaves the old
-    index intact, so this gate stays closed), which means the
-    fallback cannot resurrect a half-written staged copy over a
-    live index."""
-    from pyspark.sql.utils import AnalysisException
-
-    def _readable(path: str) -> bool:
-        try:
-            spark.read.parquet(path)
-            return True
-        except AnalysisException:
-            return False
-
-    staging = index_path.rstrip("/") + INDEX_STAGING_SUFFIX
-    if not _job_succeeded(spark, staging):
-        if not (_readable(staging) and not _readable(index_path)):
-            return False
-    # staging and index are distinct paths: a direct file-to-file
-    # copy, no executor-memory pinning of the corpus. An id-bucketed
-    # layout is preserved (the staged copy carries the bucket column).
-    overwrite_writer(spark.read.parquet(staging)).parquet(index_path)
-    _delete_path(spark, staging)
-    return True
-
-
-def _staged_index_rewrite(spark, frame: DataFrame, index_path: str) -> None:
-    """Crash-safe in-place rewrite: stage ``frame`` to the sibling
-    staging dir (complete = ``_SUCCESS``), overwrite the index from
-    the staged files, then drop the staging copy. A crash at any
-    point either leaves the old index intact (staging incomplete) or
-    leaves a complete staged copy that
-    :func:`jaccard_restore_staging` replays. A frame carrying
-    :data:`ID_BUCKET_COL` is written ``partitionBy`` at both steps,
-    so the bucketed layout survives rewrites and restores."""
-    staging = index_path.rstrip("/") + INDEX_STAGING_SUFFIX
-    overwrite_writer(frame).parquet(staging)
-    overwrite_writer(spark.read.parquet(staging)).parquet(index_path)
-    _delete_path(spark, staging)
+def _compact_id_index(
+    spark,
+    path: str,
+    id_col: str,
+    n_id_buckets: int | None,
+    files_per_billion_rows: int = 2000,
+) -> dict:
+    """Dedupe an id-keyed index by id and (re)bucket it in ONE staged
+    write: an explicit ``n_id_buckets`` converts (or re-buckets) the
+    :func:`id_bucketed_index` layout, otherwise an existing bucketed
+    layout is kept under its recorded modulus."""
+    restored = staging.restore(spark, path)
+    index = spark.read.parquet(path)
+    target_nb = n_id_buckets
+    if target_nb is None and ID_BUCKET_COL in index.columns:
+        target_nb = _id_bucket_modulus(index, id_col)
+    deduped = index.dropDuplicates([id_col])
+    if ID_BUCKET_COL in deduped.columns:
+        deduped = deduped.drop(ID_BUCKET_COL)
+    parts = []
+    if target_nb is not None:
+        deduped = id_bucketed_index(deduped, id_col, int(target_nb))
+        parts = [ID_BUCKET_COL]
+    return _stage_compaction(
+        spark,
+        path,
+        deduped,
+        index.count(),
+        parts,
+        restored,
+        files_per_billion_rows,
+    )
 
 
 def jaccard_compact(
@@ -1568,69 +1543,19 @@ def jaccard_compact(
     Run it between drains/ingests (like any layout maintenance — it
     overwrites the paths a concurrent ingest would be reading). The
     frozen order file is untouched: compaction reorders FILES, never
-    tokens. The index rewrite is STAGED (sibling ``_staging`` dir,
-    ``_SUCCESS``-gated): a crash mid-rewrite leaves either the old
-    index or a complete staged copy that the next compaction — or
-    the streaming twin's next batch — restores via
-    :func:`jaccard_restore_staging`; a crash mid-STORE-rebuild is
-    healed the same way the streaming backfill is (the store's
-    ``_SUCCESS`` gate / a rerun of this op). Returns
-    ``{"docs": n, "removed_index_rows": n, "index_files": n,
+    tokens. The index rewrite is one MERGE write of
+    :mod:`~mydatasyncer_spark.operators.staging`: a crash leaves the
+    old index or a staged copy that the next compaction, or the
+    streaming twin's next batch, restores; a crash mid-STORE-rebuild
+    is healed the same way the streaming backfill is (the store's
+    completeness gate / a rerun of this op). ``index_files`` is sized
+    from the pre-dedupe row count. Returns ``{"docs": n,
+    "removed_index_rows": n, "index_files": n,
     "restored_from_staging": bool}``.
     """
-    import math
-
-    restored = jaccard_restore_staging(spark, index_path)
-    index = spark.read.parquet(index_path)
-    raw_rows = index.count()
-    staging = index_path.rstrip("/") + INDEX_STAGING_SUFFIX
-    # target id-bucket layout: an explicit n_id_buckets converts (or
-    # re-buckets) the index; otherwise an existing bucketed layout is
-    # preserved under its own recorded modulus. Compaction is the
-    # designated layout converter — a standing stream appends small
-    # files following the stored layout, this is where the layout
-    # itself changes.
-    target_nb = n_id_buckets
-    if target_nb is None and ID_BUCKET_COL in index.columns:
-        target_nb = _id_bucket_modulus(index, id_col)
-    # ONE dedup pass, straight into the staged copy — no
-    # executor-memory pinning of the corpus; sizing happens on the
-    # staging→index copy, where the row count is already known
-    deduped = index.dropDuplicates([id_col])
-    if ID_BUCKET_COL in deduped.columns:
-        deduped = deduped.drop(ID_BUCKET_COL)
-    if target_nb is not None:
-        deduped = id_bucketed_index(deduped, id_col, int(target_nb))
-    w = deduped.write.mode("overwrite")
-    if target_nb is not None:
-        w = w.partitionBy(ID_BUCKET_COL)
-    w.parquet(staging)
-    staged = spark.read.parquet(staging)
-    docs = staged.count()
-    n_files = max(1, math.ceil(docs * files_per_billion_rows / 1e9))
-    if target_nb is not None:
-        # cluster on the bucket key so each directory lands few large
-        # files, not one sliver per task; metadata re-stamped (a
-        # partition column rebuilds from directory names on read)
-        rebucketed = id_bucketed_index(
-            staged.drop(ID_BUCKET_COL), id_col, int(target_nb)
-        )
-        sized = rebucketed.repartition(
-            max(n_files, 1), F.col(ID_BUCKET_COL)
-        )
-        sized.write.partitionBy(ID_BUCKET_COL).mode(
-            "overwrite"
-        ).parquet(index_path)
-    else:
-        # coalesce when shrinking (no extra shuffle); repartition to
-        # grow
-        sized = (
-            staged.coalesce(n_files)
-            if n_files <= staged.rdd.getNumPartitions()
-            else staged.repartition(n_files)
-        )
-        sized.write.mode("overwrite").parquet(index_path)
-    _delete_path(spark, staging)
+    stats = _compact_id_index(
+        spark, index_path, id_col, n_id_buckets, files_per_billion_rows
+    )
     if prefix_store_path is not None:
         store = spark.read.parquet(prefix_store_path)
         meta = (
@@ -1685,10 +1610,10 @@ def jaccard_compact(
                 containment_store_path
             )
     return {
-        "docs": docs,
-        "removed_index_rows": raw_rows - docs,
-        "index_files": n_files,
-        "restored_from_staging": restored,
+        "docs": stats["rows"],
+        "removed_index_rows": stats["removed_rows"],
+        "index_files": stats["files"],
+        "restored_from_staging": stats["restored_from_staging"],
     }
 
 
@@ -1741,7 +1666,7 @@ def jaccard_refreeze(
     "restored_from_staging": bool}``."""
     from pyspark.sql.utils import AnalysisException
 
-    restored = jaccard_restore_staging(spark, index_path)
+    restored = staging.restore(spark, index_path)
     order_loc = order_path or index_path.rstrip("/") + "_order"
     index = spark.read.parquet(index_path)
     # pin the new order BEFORE any file mutation: its lineage reads
@@ -1783,17 +1708,18 @@ def jaccard_refreeze(
         reordered = id_bucketed_index(
             reordered, id_col, _id_bucket_modulus(index, id_col)
         )
-    staging = index_path.rstrip("/") + INDEX_STAGING_SUFFIX
     # order first: from here on, any crash reads as "order missing"
     # (the migration trigger) — never as stale-order-over-new-arrays
-    _delete_path(spark, order_loc)
+    staging._delete_path(spark, order_loc)
     if prefix_store_path is not None:
-        _delete_path(spark, prefix_store_path)
-    overwrite_writer(reordered).parquet(staging)
-    staged = spark.read.parquet(staging)
-    docs = staged.count()
-    overwrite_writer(staged).parquet(index_path)
-    _delete_path(spark, staging)
+        staging._delete_path(spark, prefix_store_path)
+    docs = staging.write(
+        spark,
+        reordered,
+        index_path,
+        staging.SUPERSEDE,
+        id_bucket_layout(reordered.columns),
+    )
     new_order.write.mode("overwrite").parquet(order_loc)
     if prefix_store_path is not None:
         rebuilt = jaccard_prefix_store(

@@ -371,9 +371,10 @@ def diff_counts_pruned(
     single-split source (no-op at scale) — then pinned with an eager
     ``localCheckpoint`` (~17 bytes/row of executor-local state per
     side, cheaper than a second full read of every sync column;
-    blocks are NOT replicated, so an executor loss mid-query
-    recomputes from source — acceptable for a derived frame inside
-    one query). The changed-bucket summary aggregates FROM the pinned
+    blocks are NOT replicated and have no lineage to recompute from,
+    so an executor loss mid-query fails the job with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and the caller re-runs it —
+    acceptable for a derived frame inside one query). The changed-bucket summary aggregates FROM the pinned
     frames and the classification join filters the SAME frames, so
     each wide snapshot is read once — and every post-pin plan is
     lineage-truncated, which keeps driver-side analysis of the

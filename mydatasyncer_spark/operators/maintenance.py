@@ -1,23 +1,17 @@
-"""Staged compaction for ALL append-only stores.
+"""Maintenance ops for the persisted stores: compaction, index
+rebuilds, model-store writes and the decision-signal reports that say
+when each one pays.
 
-Every continuous-ingestion store in the engine appends one small
-file per micro-batch — the MinHash signature index and survivors
-table (``streaming/continuous.continuous_dedup``), pairs tables,
-the mergeable-sketch partials tables (``_continuous_partials``),
-and the bucket-partitioned IVF index (``continuous_ann_index``).
-A standing stream therefore accumulates unbounded file counts, and
-crash replays / per-task-visible committers can leave duplicate
-rows. ``jaccard_compact`` solved this for the ordered Jaccard index
-with a ``_SUCCESS``-gated staged rewrite; this module generalizes
-that exact protocol to every other store (r8 verdict, missing #4).
-
-Crash story (same as the Jaccard one, see
-``operators/dedup.jaccard_restore_staging``): the compacted copy is
-staged to a sibling ``_staging`` dir first; the in-place overwrite
-only starts once staging is complete, so a crash at any point
-leaves either the old store intact or a complete staged copy that
-:func:`restore_staging` replays — never a half-store a stream would
-mistake for a fresh bootstrap.
+Every continuous-ingestion store appends one small file per
+micro-batch — the MinHash signature index and survivors table
+(``streaming/continuous.continuous_dedup``), pairs tables, the
+mergeable-sketch partials tables (``_continuous_partials``), and the
+bucket-partitioned IVF index (``continuous_ann_index``). A standing
+stream therefore accumulates unbounded file counts, and crash
+replays / per-task-visible committers can leave duplicate rows.
+:func:`compact_table` rewrites such a store deduplicated and sized.
+Every rewrite here goes through :mod:`~mydatasyncer_spark.operators.
+staging`, whose docstring states the crash contract once.
 
 Scale note: compaction is the ONLY corpus-linear maintenance op and
 runs between drains (it overwrites paths a concurrent ingest would
@@ -28,111 +22,14 @@ every scan.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
+from mydatasyncer_spark.operators import staging
 from mydatasyncer_spark.operators.dedup import (
     ID_BUCKET_COL,
-    INDEX_STAGING_SUFFIX,
-    _delete_path,
-    _job_succeeded,
+    _stage_compaction,
     id_bucket_layout,
-    overwrite_writer,
 )
-
-
-#: sibling dir a post-crash-append merge is staged to during a
-#: restore (see restore_staging's union branch)
-RESTORE_MERGE_SUFFIX = "_restore_merge"
-
-
-def restore_staging(spark, path: str, partition_by: list[str] | None = None) -> bool:
-    """Generic twin of ``jaccard_restore_staging``: replay a complete
-    staged copy left by a crashed :func:`compact_table` overwrite.
-    ``partition_by`` must match the store's layout so the restore
-    preserves the directory partitioning (and with it the partition
-    pruning readers rely on); left ``None``, the reserved
-    :data:`~mydatasyncer_spark.operators.dedup.ID_BUCKET_COL` layout
-    is auto-preserved when the staged copy carries that column. Same
-    gate as the Jaccard one: the staging dir's ``_SUCCESS`` marker,
-    with the markers-disabled fallback (restore when staging reads
-    and the store does not — the only state a crash mid-overwrite can
-    leave).
-
-    Post-crash appends are PRESERVED, not clobbered: a store that
-    reads back complete (its own root ``_SUCCESS``) alongside a
-    complete staged copy means rows were appended AFTER the crash —
-    a stream bootstrapping into the deleted store path, or an
-    out-of-band append that skipped the restore-first discipline.
-    Those rows exist only in the store; the staged copy holds
-    everything from before. The restore then takes the UNION of both
-    with full-row duplicates dropped (lossless for every store in
-    the family — bit-identical rows are replay/committer artifacts,
-    the same argument as :func:`compact_table`'s default mode; rows
-    from a half-written overwrite are a subset of the staged content
-    and collapse into it). The merge is staged to a sibling
-    ``_restore_merge`` dir first so a crash mid-restore never loses
-    the merged appends: a complete merge dir supersedes the staging
-    dir on the next call. Like compaction, restores are not run
-    concurrently with ingestion — the streams call this at batch
-    start, before they append."""
-    from pyspark.sql.utils import AnalysisException
-
-    from mydatasyncer_spark.sources.writers import _hadoop_fs
-
-    def _readable(p: str) -> bool:
-        try:
-            spark.read.parquet(p)
-            return True
-        except AnalysisException:
-            return False
-
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    merge_tmp = path.rstrip("/") + RESTORE_MERGE_SUFFIX
-    # fast path — the streams call this at every batch start, so the
-    # no-pending-restore case must cost two existence probes, not a
-    # schema-inferring read attempt
-    jvm, fs, _ = _hadoop_fs(spark, path)
-    if not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(staging)
-    ) and not fs.exists(jvm.org.apache.hadoop.fs.Path(merge_tmp)):
-        return False
-    if _job_succeeded(spark, merge_tmp) and _readable(merge_tmp):
-        # a previous restore crashed after merging post-crash appends
-        # — the merge dir is staging ∪ store-at-merge-time and
-        # supersedes both
-        source = spark.read.parquet(merge_tmp)
-    else:
-        if not _job_succeeded(spark, staging):
-            if not (_readable(staging) and not _readable(path)):
-                return False
-        staged = spark.read.parquet(staging)
-        if _readable(path) and _job_succeeded(spark, path):
-            merged = staged.unionByName(
-                spark.read.parquet(path)
-            ).distinct()
-            overwrite_writer(merged, partition_by).parquet(merge_tmp)
-            source = spark.read.parquet(merge_tmp)
-        else:
-            source = staged
-    overwrite_writer(source, partition_by).parquet(path)
-    _delete_path(spark, staging)
-    _delete_path(spark, merge_tmp)
-    return True
-
-
-def _pending_staging(spark, path: str) -> bool:
-    """True when a crashed staged rewrite left a readable staging
-    dir nobody restored — the shared ``pending_staging`` probe every
-    decision-signal report exposes."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        spark.read.parquet(path.rstrip("/") + INDEX_STAGING_SUFFIX)
-        return True
-    except AnalysisException:
-        return False
 
 
 def _bucket_occupancy(bucketed, bucket_col: str = "_b") -> dict:
@@ -191,8 +88,10 @@ def compact_table(
     files instead of one sliver per original file.
 
     File sizing matches ``jaccard_compact``: ``files_per_billion_rows``
-    per 1e9 rows, floor 1 — coalesce (no shuffle) when shrinking an
-    unpartitioned store. Returns ``{"rows", "removed_rows", "files",
+    per 1e9 rows of the store as read (pre-dedupe), floor 1 — coalesce
+    (no shuffle) when shrinking an unpartitioned store. The rewrite is
+    one MERGE write of :mod:`~mydatasyncer_spark.operators.staging`.
+    Returns ``{"rows", "removed_rows", "files",
     "restored_from_staging"}``. WHEN to run it:
     :func:`compaction_report` measures the store's current
     duplicate-row and file-count tax (and surfaces a crashed
@@ -207,255 +106,75 @@ def compact_table(
     - IVF index → ``dedupe_cols=["neighbor_id"],
       partition_by=["bucket"]``
     """
-    restored = restore_staging(spark, path, partition_by)
+    restored = staging.restore(spark, path)
     df = spark.read.parquet(path)
-    partition_by = id_bucket_layout(df.columns, partition_by)
-    raw = df.count()
     deduped = (
         df.dropDuplicates(dedupe_cols)
         if dedupe_cols
         else df.dropDuplicates()
     )
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    overwrite_writer(deduped, partition_by).parquet(staging)
-    staged = spark.read.parquet(staging)
-    rows = staged.count()
-    n_files = max(1, math.ceil(rows * files_per_billion_rows / 1e9))
-    if partition_by:
-        # cluster on the partition key: each directory receives its
-        # rows from the few tasks owning that key, not a sliver from
-        # every task
-        sized = staged.repartition(
-            n_files, *[F.col(c) for c in partition_by]
-        )
-    else:
-        sized = (
-            staged.coalesce(n_files)
-            if n_files <= staged.rdd.getNumPartitions()
-            else staged.repartition(n_files)
-        )
-    overwrite_writer(sized, partition_by).parquet(path)
-    _delete_path(spark, staging)
-    return {
-        "rows": rows,
-        "removed_rows": raw - rows,
-        "files": n_files,
-        "restored_from_staging": restored,
-    }
-
-
-def staged_replace(
-    spark, frame, path: str, partition_by: list[str] | None = None
-) -> int:
-    """Replace the parquet dir at ``path`` with ``frame`` through the
-    staged rename-swap protocol (r12's :func:`write_model_store`
-    mechanics, factored out in r13 for every store that is REPLACED
-    whole per step — streaming rollup/join-view state, snapshot
-    stores, SCD2 path histories): stage to a sibling ``_staging``
-    dir, prove it reads back complete (the count), then swap by two
-    constant-time metadata ops. A bare ``mode("overwrite")`` deletes
-    the store for the whole rewrite — its crash window scales with
-    store size and a crash inside it leaves nothing readable; here a
-    crash anywhere in the write leaves the OLD store serving, and
-    the only residual window is the rename swap, entered with the
-    complete staged copy already on disk and closed mechanically by
-    :func:`restore_staged_replace`. ``partition_by`` stages the same
-    directory layout the store is read with — EXCEPT when ``frame``
-    is empty: a partitioned write of zero rows produces a staging dir
-    holding only ``_SUCCESS`` (no schema-bearing file), so the
-    prove-readable count would raise and the batch would fail on
-    every retry. An empty frame is staged unpartitioned instead,
-    keeping the partition columns as ordinary (readable, empty) data
-    columns; :func:`~mydatasyncer_spark.streaming.continuous.
-    _dynamic_bucket_overwrite` clears that root-file form before its
-    first partitioned write. Returns rows written."""
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    w = frame.write.mode("overwrite")
-    if partition_by and not frame.isEmpty():
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    rows = spark.read.parquet(staging).count()
-    _swap_in_staging(spark, staging, path)
-    return rows
-
-
-def restore_staged_replace(spark, path: str, verify=None) -> bool:
-    """Resolve a crashed :func:`staged_replace` — SUPERSEDE
-    semantics: the staged copy, when complete, IS the newest version
-    of a store that is rewritten whole per step, so adopting it
-    finishes the crashed swap (union-merging, the append-store
-    :func:`restore_staging` rule, would mix two steps' contents).
-    States: marked+readable staging → adopt, True. Marked but
-    unreadable (a crashed object-store copy moved the marker without
-    the data) → never destroy the serving store for it: delete the
-    dead staging, False. Unmarked + store readable → the write died
-    mid-staging while the old store kept serving: delete, False.
-    Unmarked + store unreadable → the markers-disabled window, where
-    mere readability can't distinguish a complete staged copy from a
-    partial write's individually-complete files: adopt only when
-    ``verify(staging_path)`` (the store kind's own refusing reader,
-    when it has one) returns True; with no verifier, fall back to
-    readability — the :func:`restore_staging` gate, degraded
-    protection honestly inherited by stores without fingerprints."""
-    from pyspark.sql.utils import AnalysisException
-
-    from mydatasyncer_spark.sources.writers import _hadoop_fs
-
-    def _readable(p: str) -> bool:
-        try:
-            spark.read.parquet(p)
-            return True
-        except AnalysisException:
-            return False
-
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    jvm, fs, _ = _hadoop_fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(staging)):
-        return False
-    if not _job_succeeded(spark, staging):
-        ok = verify(staging) if verify is not None else _readable(staging)
-        if _readable(path) or not ok:
-            _delete_path(spark, staging)
-            return False
-    elif not _readable(staging):
-        _delete_path(spark, staging)
-        return False
-    _swap_in_staging(spark, staging, path)
-    return True
-
-
-def restore_model_store(spark, path: str) -> bool:
-    """Resolve a crashed :func:`write_model_store` rewrite — the
-    WRITE-ONCE twin of :func:`restore_staging`, with one deliberate
-    semantic difference: a complete staged copy SUPERSEDES the store
-    instead of union-merging with it. Model stores
-    (:func:`~mydatasyncer_spark.operators.classify.
-    quality_model_frame`, :func:`~mydatasyncer_spark.operators.
-    tokenizer.bpe_merges_frame`, :func:`~mydatasyncer_spark.
-    operators.text.unigram_model_frame`) are rewritten whole per
-    retrain and never append-maintained, so "staged ∪ old" is never a
-    valid store — it would mix feature/rank rows from two training
-    runs, exactly the state the stores' refusal matrices exist to
-    reject. The staged copy, when complete, IS the newest trained
-    artifact; adopting it finishes the crashed swap.
-
-    Crash states and their resolution (every state the
-    :func:`write_model_store` protocol — or its first-ever run with
-    committer markers disabled — can leave):
-
-    - staging complete (``_SUCCESS``) AND readable, store anything →
-      adopt the staged copy, delete staging, return True (a crash
-      between staging and swap, or mid-swap).
-    - staging marked but NOT readable (e.g. a crashed object-store
-      copy moved the marker without every data file) → never destroy
-      the serving store for it: delete the dead staging, return
-      False. The old store, when present, keeps serving.
-    - staging incomplete, store readable → the retrain died while
-      producing its artifact; the old store kept serving the whole
-      time. The partial staging is unusable — delete it so the next
-      retrain starts clean; return False. (Like every restore in the
-      family, this is not run concurrently with a live retrain.)
-    - staging unmarked AND store unreadable → the markers-disabled
-      fallback. Mere readability proves nothing here (a v2/direct
-      committer leaves individually-complete files from a partial
-      job — including a FIRST-EVER write that crashed mid-staging,
-      where no old store exists to fall back to), so adoption is
-      gated on the staged copy resolving through its kind's
-      refusing reader (the :func:`model_store_report` dispatch): a
-      genuine crashed swap's staging was a complete verified store
-      and resolves; a partial first write fails its own fingerprint
-      and is deleted, return False.
-
-    Mechanics shared with every whole-replace store via
-    :func:`restore_staged_replace`; the model stores add their
-    refusing readers as the markers-disabled verifier.
-    """
-    return restore_staged_replace(
-        spark, path, verify=lambda p: _store_resolves(spark, p)
+    return _stage_compaction(
+        spark,
+        path,
+        deduped,
+        df.count(),
+        id_bucket_layout(df.columns, partition_by),
+        restored,
+        files_per_billion_rows,
     )
 
 
-def _store_resolves(spark, path: str) -> bool:
-    """Whether the parquet dir at ``path`` resolves through its
-    kind's refusing reader — :func:`model_store_report`'s dispatch
-    folded back into the predicate the restore fallback needs. Used
-    only on the markers-disabled branch, where readability alone
-    cannot distinguish a complete staged store from a partial
-    first-ever write (the readers' fingerprints can)."""
-    return bool(model_store_report(spark, path)["valid"])
+def restore_model_store(spark, path: str) -> bool:
+    """Resolve a crashed :func:`write_model_store` rewrite with
+    :func:`~mydatasyncer_spark.operators.staging.restore`. Model
+    stores (:func:`~mydatasyncer_spark.operators.classify.
+    quality_model_frame`, :func:`~mydatasyncer_spark.operators.
+    tokenizer.bpe_merges_frame`, :func:`~mydatasyncer_spark.
+    operators.text.unigram_model_frame`) are rewritten whole per
+    retrain, so a complete staged copy SUPERSEDES the store: "staged
+    ∪ old" would mix feature/rank rows from two training runs,
+    exactly the state the stores' refusal matrices reject.
 
-
-def _swap_in_staging(spark, staging: str, path: str) -> None:
-    """Adopt a COMPLETE staged store by filesystem RENAME — two
-    constant-time metadata ops (delete target, rename staging), so
-    the swap's crash window does not scale with store size. The
-    alternative (read staging, rewrite path through Spark) is a
-    second full write of the store — nothing for a driver-sized
-    weights table, a second corpus pass for a billions-of-rows
-    unigram logprob table. Staging is a sibling dir (same
-    filesystem), so rename is the cheap path everywhere; on
-    object-store committers it degrades to a server-side copy, still
-    never a recompute. A crash between the delete and the rename
-    leaves (no path, complete staging) — exactly the mid-swap state
-    :func:`restore_model_store` already resolves. The delete is only
-    ever entered with the staged copy PROVEN to read back — the
-    write path counts it, the restore path gates on readability (and
-    the markers-disabled branch on full reader resolution) — so a
-    dead staging can never destroy a healthy serving store."""
-    from mydatasyncer_spark.sources.writers import _hadoop_fs
-
-    jvm, fs, _ = _hadoop_fs(spark, path)
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs.delete(dst, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), dst):
-        raise IOError(
-            f"model-store swap: rename {staging} -> {path} failed — "
-            "the complete staged copy is intact; re-run "
-            "restore_model_store"
-        )
+    The one model-store addition is the markers-disabled verifier:
+    with the staged copy unmarked and the store unreadable,
+    readability proves nothing (a v2/direct committer leaves
+    individually-complete files from a partial job — including a
+    FIRST-EVER write that crashed mid-staging, where no old store
+    exists to fall back to), so adoption is gated on the copy
+    resolving through its kind's refusing reader (the
+    :func:`model_store_report` dispatch). A genuine crashed swap's
+    copy was a complete verified store and resolves; a partial first
+    write fails its own fingerprint and is deleted."""
+    return staging.restore(
+        spark, path, verify=lambda p: model_store_report(spark, p)["valid"]
+    )
 
 
 def write_model_store(spark, frame, path: str) -> int:
-    """The ONE sanctioned way to (re)write a write-once model store
-    to disk — the :func:`pq_rebuild` staging discipline applied to
-    the trained-model stores (r11 verdict, what's-missing #5): the
-    new store is staged to a sibling ``_staging`` dir first and
-    ``path`` is only touched once staging reads back complete — and
-    then only by a filesystem RENAME swap (two constant-time
-    metadata ops, :func:`_swap_in_staging`), so neither the swap's
-    cost nor its crash window scales with store size. A crash
-    anywhere in the (long) artifact-production phase leaves the OLD
-    store serving a standing
+    """The ONE sanctioned way to (re)write a write-once model store:
+    a SUPERSEDE :func:`~mydatasyncer_spark.operators.staging.write`.
+    A crash anywhere in the (long) artifact-production phase leaves
+    the OLD store serving a standing
     ``continuous_curation(model_store_path=...)`` stream untouched;
-    the only residual window is the rename swap itself — entered
-    with the complete staged copy already on disk, so a crash there
-    is closed MECHANICALLY by :func:`restore_model_store` (or the
-    next write), never by retraining. A bare ``mode("overwrite")``
-    instead half-deletes the store for the whole rewrite with no
-    complete copy anywhere: the stream's resolve-and-refuse reader
-    fails LOUDLY (never scores wrong weights) but the stream is DOWN
-    until a human RETRAINS — inconsistent with the family's
-    crash-window standard.
+    the only residual window is the rename swap, closed mechanically
+    by :func:`restore_model_store` (or the next write), never by
+    retraining. A bare ``mode("overwrite")`` instead half-deletes the
+    store for the whole rewrite: the stream's resolve-and-refuse
+    reader fails LOUDLY but the stream is DOWN until a human
+    RETRAINS.
 
     ``frame`` is a self-describing store frame (``quality_model_
     frame`` / ``bpe_merges_frame`` / ``unigram_model_frame``) whose
     provenance rides column metadata; the parquet round-trip through
     staging preserves the footer (pinned in
     tests/test_model_stores.py). A pending crashed rewrite at
-    ``path`` is SUPERSEDED outright — the staging overwrite clobbers
-    it, and this write's swap replaces whatever the crash left —
-    deliberately not restored first: restoring would rewrite ``path``
-    before ``frame`` is evaluated, and a frame derived from the
-    stored table itself (the re-baseline flow: read the store, stamp
-    a new baseline, write it back) would then read mid-overwrite
-    state. As written, ``path`` is never touched until the staged
-    copy is complete, so self-derived frames are safe by
-    construction. Returns the row count written.
-
-    Mechanics are the generic :func:`staged_replace` (the staging
-    count both returns rows and proves the staged copy reads back
-    complete before one byte of the serving store is touched)."""
-    return staged_replace(spark, frame, path)
+    ``path`` is SUPERSEDED outright, deliberately not restored first:
+    restoring would rewrite ``path`` before ``frame`` is evaluated,
+    and a frame derived from the stored table itself (the
+    re-baseline flow: read the store, stamp a new baseline, write it
+    back) would then read mid-swap state. Returns the row count
+    written."""
+    return staging.write(spark, frame, path, staging.SUPERSEDE)
 
 
 def model_store_report(spark, path: str) -> dict:
@@ -487,7 +206,7 @@ def model_store_report(spark, path: str) -> dict:
     from pyspark.sql.utils import AnalysisException
 
     report: dict = {
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
         "readable": True,
         "valid": False,
         "kind": "unknown",
@@ -576,7 +295,8 @@ def compaction_report(
       ``rows_per_file`` decays toward batch size over time.
     - ``pending_staging`` — True when a crashed rewrite left a
       staging dir; the next maintenance call (or
-      :func:`restore_staging`) resolves it. A True here with no
+      :func:`~mydatasyncer_spark.operators.staging.restore`) resolves
+      it. A True here with no
       maintenance scheduled is a crash nobody noticed.
 
     Run-compact-when contract: compact when ``duplicate_rows`` > 0
@@ -617,7 +337,7 @@ def compaction_report(
         "duplicate_rows": rows - distinct,
         "files": files,
         "rows_per_file": rows / files if files else 0.0,
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 
@@ -638,37 +358,20 @@ def compact_minhash_index(
     in one pass (the ``jaccard_compact`` prefix-store contract).
     ``n_id_buckets`` converts the index to (or re-buckets) the
     :func:`~mydatasyncer_spark.operators.dedup.id_bucketed_index`
-    layout, which makes the incremental join's estimate-side index
-    read candidate-proportional; an existing bucketed layout is
-    preserved when omitted (the ``jaccard_compact`` contract)."""
+    layout in the same single staged write, which makes the
+    incremental join's estimate-side index read
+    candidate-proportional; an existing bucketed layout is preserved
+    when omitted (the ``jaccard_compact`` contract)."""
     from mydatasyncer_spark.operators.dedup import (
         _BAND_BS_KEY,
         _BAND_K_KEY,
         _BAND_NB_KEY,
         BAND_BUCKET_COL,
-        _id_bucket_modulus,
-        _staged_index_rewrite,
-        id_bucketed_index,
+        _compact_id_index,
         minhash_band_store,
     )
 
-    stats = compact_table(spark, path, dedupe_cols=[id_col])
-    if n_id_buckets is not None:
-        idx = spark.read.parquet(path)
-        current = (
-            _id_bucket_modulus(idx, id_col)
-            if ID_BUCKET_COL in idx.columns
-            else None
-        )
-        if current != int(n_id_buckets):
-            rebucketed = id_bucketed_index(
-                idx.drop(ID_BUCKET_COL)
-                if ID_BUCKET_COL in idx.columns
-                else idx,
-                id_col,
-                int(n_id_buckets),
-            )
-            _staged_index_rewrite(spark, rebucketed, path)
+    stats = _compact_id_index(spark, path, id_col, n_id_buckets)
     if band_store_path is not None:
         store = spark.read.parquet(band_store_path)
         meta = (
@@ -831,7 +534,7 @@ def lsh_occupancy_report(
         "rows": idx.count(),
         "recorded_planes": int(rec) if rec is not None else None,
         "candidates": [_occ(int(p)) for p in candidate_planes],
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 
@@ -955,7 +658,7 @@ def ivf_drift_report(
             inertia_frozen / inertia_new if inertia_new else None
         ),
         "centroids_retrained": new_cens,
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 
@@ -1000,11 +703,13 @@ def ivf_rebuild(
     changes it in one place; explicit ``centroids=`` from this op's
     return value remains the over-budget fallback.
 
-    Crash story: staging completes (``_SUCCESS``) before a single
-    old file is touched, so a crash leaves either the old index
-    intact or a complete staged copy that :func:`restore_staging`
-    (called first here, and by compaction) replays. Returns
-    ``{"rows", "centroids", "restored_from_staging"}``."""
+    Crash story: the rewrite is a SUPERSEDE
+    :func:`~mydatasyncer_spark.operators.staging.write`, so a crash
+    leaves the old index or a complete copy under the new quantizer,
+    and the restore (run first here, and by compaction and the
+    streams) adopts the copy whole — never a union of rows bucketed
+    under two centroid sets. Returns ``{"rows", "centroids",
+    "restored_from_staging"}``."""
     from mydatasyncer_spark.operators.dedup import (
         _id_bucket_modulus,
         id_bucketed_index,
@@ -1014,7 +719,7 @@ def ivf_rebuild(
         kmeans_centroids,
     )
 
-    restored = restore_staging(spark, path, ["bucket"])
+    restored = staging.restore(spark, path)
     idx = spark.read.parquet(path)
     # an id-bucket sub-layout survives the rebuild (retraining moves
     # centroid buckets, never id->bucket assignments)
@@ -1039,12 +744,13 @@ def ivf_rebuild(
     )
     if idx_nb is not None:
         rebuilt = id_bucketed_index(rebuilt, "neighbor_id", idx_nb)
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    overwrite_writer(rebuilt, ["bucket"]).parquet(staging)
-    staged = spark.read.parquet(staging)
-    rows = staged.count()
-    overwrite_writer(staged, ["bucket"]).parquet(path)
-    _delete_path(spark, staging)
+    rows = staging.write(
+        spark,
+        rebuilt,
+        path,
+        staging.SUPERSEDE,
+        id_bucket_layout(rebuilt.columns, ["bucket"]),
+    )
     return {
         "rows": rows,
         "centroids": centroids,
@@ -1172,7 +878,7 @@ def pq_drift_report(
         "mse_retrained": mse_new,
         "mse_ratio": mse_frozen / mse_new if mse_new else None,
         "books_retrained": new_books,
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 
@@ -1208,13 +914,11 @@ def pq_rebuild(
     (retraining THEM is :func:`ivf_rebuild`'s job — the two
     quantizers drift and rebuild independently).
 
-    Crash story: identical to every staged rewrite — ``_SUCCESS``-
-    gated staging completes before one old file is touched;
-    :func:`restore_staging` (run first here) replays a crashed
-    window. The rebuilt store stamps BOTH new fingerprints, so every
-    dependent reader/stream refuses stale-books probes from that
-    moment. Returns ``{"rows", "books", "centroids",
-    "restored_from_staging"}``."""
+    Crash story: the :func:`ivf_rebuild` one — a SUPERSEDE staged
+    write, restored first here. The rebuilt store stamps BOTH new
+    fingerprints, so every dependent reader/stream refuses
+    stale-books probes from that moment. Returns ``{"rows", "books",
+    "centroids", "restored_from_staging"}``."""
     from mydatasyncer_spark.operators.similarity import (
         ivf_residuals,
         pq_index,
@@ -1228,7 +932,7 @@ def pq_rebuild(
         id_bucketed_index,
     )
 
-    restored = restore_staging(spark, path, ["bucket"])
+    restored = staging.restore(spark, path)
     store = spark.read.parquet(path)
     # the IVFADC residual construction survives the rebuild: books
     # retrain over residuals under the (possibly replaced) coarse
@@ -1281,12 +985,13 @@ def pq_rebuild(
     )
     if idx_nb is not None:
         rebuilt = id_bucketed_index(rebuilt, "neighbor_id", idx_nb)
-    staging = path.rstrip("/") + INDEX_STAGING_SUFFIX
-    overwrite_writer(rebuilt, ["bucket"]).parquet(staging)
-    staged = spark.read.parquet(staging)
-    rows = staged.count()
-    overwrite_writer(staged, ["bucket"]).parquet(path)
-    _delete_path(spark, staging)
+    rows = staging.write(
+        spark,
+        rebuilt,
+        path,
+        staging.SUPERSEDE,
+        id_bucket_layout(rebuilt.columns, ["bucket"]),
+    )
     return {
         "rows": rows,
         "books": books,
@@ -1399,7 +1104,7 @@ def band_occupancy_report(
             int(coll["_max"]) / n_rows if n_rows else 0.0
         ),
         "candidates": [_occ(int(p)) for p in candidate_buckets],
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 
@@ -1503,7 +1208,7 @@ def containment_occupancy_report(
             float(df_stats["_sq"]) / n_rows if n_rows else 0.0
         ),
         "candidates": [_occ(int(p)) for p in candidate_buckets],
-        "pending_staging": _pending_staging(spark, path),
+        "pending_staging": staging.pending(spark, path),
     }
 
 

@@ -36,6 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from mydatasyncer_spark.config import SYNC_MODE_DIFF, TableSpec
+from mydatasyncer_spark.operators import staging
 from mydatasyncer_spark.operators.columns import determine_sync_columns
 from mydatasyncer_spark.operators.diff import diff_snapshots
 from mydatasyncer_spark.operators.validation import validate_primary_keys
@@ -247,7 +248,6 @@ def dedup_apply_batch(
         LSH_BAND_SIZE,
         MINHASH_K,
         _id_bucket_modulus,
-        _job_succeeded,
         id_bucketed_index,
         minhash_band_store,
         minhash_lsh_pairs,
@@ -275,28 +275,14 @@ def dedup_apply_batch(
             and int(meta[_BAND_NB_KEY]) == int(n_band_buckets)
         )
 
-    def bands_complete(spark) -> bool:
-        # readable AND job-committed; markers-disabled fallback keyed
-        # on the index (the continuous_jaccard_index contract)
-        try:
-            spark.read.parquet(band_store_path)
-        except AnalysisException:
-            return False
-        return _job_succeeded(spark, band_store_path) or not _job_succeeded(
-            spark, index_path
-        )
-
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    # the restore-first discipline (jaccard_restore_staging's
-    # contract, applied to every store this stage appends to): a
-    # compaction crash window is replayed BEFORE the batch can
-    # bootstrap into the deleted store path
-    from mydatasyncer_spark.operators.maintenance import restore_staging
-
-    restore_staging(spark, index_path)
-    restore_staging(spark, survivors_path)
+    # restore-first on every store this stage appends to: a crashed
+    # rewrite is resolved BEFORE the batch can bootstrap into the
+    # deleted store path
+    staging.restore(spark, index_path)
+    staging.restore(spark, survivors_path)
     batch = batch_df.dropDuplicates([id_col])
     try:
         index = spark.read.parquet(index_path)
@@ -324,7 +310,8 @@ def dedup_apply_batch(
     if index is not None:
         corpus_bands = None
         if band_store_path is not None:
-            if not bands_complete(spark) or not (
+            complete = staging.complete(spark, band_store_path, index_path)
+            if not complete or not (
                 bands_match_config(spark.read.parquet(band_store_path))
             ):
                 # absent / half-written / built under different
@@ -602,24 +589,15 @@ def continuous_curation(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        from mydatasyncer_spark.operators.maintenance import (
-            restore_staging,
-        )
-
         # restore-first on EVERY store this batch reads or appends,
         # BEFORE the replay-guard read below: a batch arriving inside
         # a crashed index-compaction window would otherwise see a
         # missing/partial signature index, skip the guard, and
         # re-append a replayed survivor (dedup_apply_batch restores
         # again — idempotent and cheap when nothing is pending).
-        # The key store names its partition key explicitly: a restore
-        # that flattened the layout would leave flat files at the
-        # root next to the later appends' _ckey_bucket= directories —
-        # a mixed layout partition discovery cannot read (only the
-        # reserved _id_bucket column is auto-preserved)
-        restore_staging(spark, index_path)
-        restore_staging(spark, survivors_path)
-        restore_staging(spark, content_keys_path, [_CKEY_BUCKET_COL])
+        staging.restore(spark, index_path)
+        staging.restore(spark, survivors_path)
+        staging.restore(spark, content_keys_path)
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
         # replay guard FIRST (vs the signature index): a replayed
         # accepted survivor must not reach the exact stage, where its
@@ -890,11 +868,7 @@ def continuous_ann_index(
         spark = batch_df.sparkSession
         # restore-first: replay a crashed compaction/rebuild window
         # before this batch can bootstrap into the deleted store path
-        from mydatasyncer_spark.operators.maintenance import (
-            restore_staging,
-        )
-
-        restore_staging(spark, index_path, ["bucket"])
+        staging.restore(spark, index_path)
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
         try:
             stored = spark.read.parquet(index_path)
@@ -1025,11 +999,7 @@ def continuous_pq_index(
         spark = batch_df.sparkSession
         # restore-first: replay a crashed compaction/rebuild window
         # before this batch can bootstrap into the deleted store path
-        from mydatasyncer_spark.operators.maintenance import (
-            restore_staging,
-        )
-
-        restore_staging(spark, index_path, ["bucket"])
+        staging.restore(spark, index_path)
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
         try:
             stored = spark.read.parquet(index_path)
@@ -1160,11 +1130,7 @@ def continuous_lsh_index(
         spark = batch_df.sparkSession
         # restore-first: replay a crashed compaction window before
         # this batch can bootstrap into the deleted store path
-        from mydatasyncer_spark.operators.maintenance import (
-            restore_staging,
-        )
-
-        restore_staging(spark, index_path, ["bucket"])
+        staging.restore(spark, index_path)
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
         try:
             stored = spark.read.parquet(index_path)
@@ -1302,12 +1268,8 @@ def continuous_semantic_dedup(
         spark = batch_df.sparkSession
         # restore-first: replay a crashed compaction/rebuild window
         # before this batch can bootstrap into the deleted store path
-        from mydatasyncer_spark.operators.maintenance import (
-            restore_staging,
-        )
-
-        restore_staging(spark, index_path, ["bucket"])
-        restore_staging(spark, survivors_path)
+        staging.restore(spark, index_path)
+        staging.restore(spark, survivors_path)
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
         try:
             index = spark.read.parquet(index_path)
@@ -1609,9 +1571,9 @@ def rollup_apply_batch(
     so the crash/replay semantics are directly testable. See that
     function's docstring for the idempotence contract.
 
-    r13: both stores are replaced through ``maintenance.
-    staged_replace`` (stage → prove readable → constant-time rename
-    swap) with a ``restore_staged_replace`` at batch start — a crash
+    r13: both stores are replaced by a SUPERSEDE ``staging.write``
+    (stage → prove readable → constant-time rename swap) with a
+    ``staging.restore`` at batch start — a crash
     INSIDE a write no longer leaves an unreadable store that forces
     a full re-bootstrap; the only residual window is the rename
     swap, closed by the restore. The staging dir also breaks the
@@ -1646,16 +1608,12 @@ def rollup_apply_batch(
     from pyspark.sql.utils import AnalysisException
 
     from mydatasyncer_spark.operators.ivm import maintain_rollup, rollup_state
-    from mydatasyncer_spark.operators.maintenance import (
-        restore_staged_replace,
-        staged_replace,
-    )
 
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    restore_staged_replace(spark, state_path)
-    restore_staged_replace(spark, snapshot_path)
+    staging.restore(spark, state_path)
+    staging.restore(spark, snapshot_path)
     try:
         state = spark.read.parquet(state_path)
     except Exception:
@@ -1691,7 +1649,7 @@ def rollup_apply_batch(
         if last is not None and last == batch_id:
             # replay of the batch already folded into the state —
             # only the snapshot store may be stale; re-point it
-            staged_replace(spark, batch_df, snapshot_path)
+            staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
             return
         state = state.drop("_last_batch_id")
     try:
@@ -1707,12 +1665,13 @@ def rollup_apply_batch(
     else:
         diff = diff_snapshots(batch_df, prev, primary_key)
         new_state = maintain_rollup(state, diff, group_cols, value_col)
-    staged_replace(
+    staging.write(
         spark,
         new_state.withColumn("_last_batch_id", F.lit(batch_id)),
         state_path,
+        staging.SUPERSEDE,
     )
-    staged_replace(spark, batch_df, snapshot_path)
+    staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
 
 
 def _rollup_apply_bucketed(
@@ -1738,7 +1697,6 @@ def _rollup_apply_bucketed(
         affected_rollup_groups,
         rollup_state,
     )
-    from mydatasyncer_spark.operators.maintenance import staged_replace
 
     if state is not None and RU_BUCKET_COL not in state.columns:
         state = None  # layout switch: rebootstrap under the buckets
@@ -1747,15 +1705,16 @@ def _rollup_apply_bucketed(
     except AnalysisException:
         prev = None
     if prev is None or state is None:
-        staged_replace(
+        staging.write(
             spark,
             rollup_state(batch_df, group_cols, value_col).withColumn(
                 RU_BUCKET_COL, _group_bucket_expr(group_cols, n_buckets)
             ),
             state_path,
-            partition_by=[RU_BUCKET_COL],
+            staging.SUPERSEDE,
+            [RU_BUCKET_COL],
         )
-        staged_replace(spark, batch_df, snapshot_path)
+        staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
         return
     diff = diff_snapshots(batch_df, prev, primary_key)
     buckets = sorted(
@@ -1797,7 +1756,7 @@ def _rollup_apply_bucketed(
         _dynamic_bucket_overwrite(
             spark, rebuilt, state_path, RU_BUCKET_COL, buckets
         )
-    staged_replace(spark, batch_df, snapshot_path)
+    staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
 
 
 def continuous_rollup(
@@ -1849,7 +1808,7 @@ def continuous_rollup(
     checkpoint (batch ids monotonic per store pair); wiping the
     checkpoint while keeping the stores is out of contract. A crash
     *inside* one write: unbucketed, both stores go through the
-    staged rename-swap (``maintenance.staged_replace``), so the old
+    staged rename-swap (``staging.write``), so the old
     store keeps serving until a complete replacement exists and the
     only residual window — the constant-time swap itself — is closed
     by the restore at the next batch start. Bucketed, the state
@@ -1934,7 +1893,6 @@ def _dynamic_bucket_overwrite(
     The overwrite mode is set per-write (``DataFrameWriter.option``)
     rather than on the session conf, so a concurrent writer sharing
     the SparkSession never inherits dynamic-overwrite semantics."""
-    from mydatasyncer_spark.operators.dedup import _delete_path
     from mydatasyncer_spark.sources.writers import _hadoop_fs
 
     present = {
@@ -1960,7 +1918,7 @@ def _dynamic_bucket_overwrite(
     )
     for b in buckets:
         if b not in present:
-            _delete_path(spark, f"{path}/{bucket_col}={b}")
+            staging._delete_path(spark, f"{path}/{bucket_col}={b}")
 
 
 def join_view_apply_batch(
@@ -1984,7 +1942,7 @@ def join_view_apply_batch(
     ``scd2_apply_to_table`` treatment):
 
     - ``n_buckets=None``: the view is one parquet dir, replaced whole
-      per batch — but through ``maintenance.staged_replace``, so the
+      per batch — but through ``staging.write``, so the
       crash window is the constant-time rename swap, not the
       store-sized rewrite, and no full-view ``localCheckpoint`` is
       needed (the staging dir breaks the read-path lineage). Write
@@ -2025,18 +1983,14 @@ def join_view_apply_batch(
         join_view_state,
         maintain_join_view,
     )
-    from mydatasyncer_spark.operators.maintenance import (
-        restore_staged_replace,
-        staged_replace,
-    )
 
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    restore_staged_replace(spark, snapshot_path)
+    staging.restore(spark, snapshot_path)
     # both modes stage whole-view writes at least once (legacy: every
     # batch; bucketed: the bootstrap) — finish a crashed swap first
-    restore_staged_replace(spark, view_path)
+    staging.restore(spark, view_path)
     try:
         view = spark.read.parquet(view_path)
     except Exception:
@@ -2062,7 +2016,7 @@ def join_view_apply_batch(
     ):
         last = view.select(F.max("_last_batch_id")).first()[0]
         if last is not None and last == batch_id:
-            staged_replace(spark, batch_df, snapshot_path)
+            staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
             return
         view = view.drop("_last_batch_id")
     try:
@@ -2072,34 +2026,37 @@ def join_view_apply_batch(
     if prev is None or view is None:
         new_view = join_view_state(batch_df, right_df, join_key, how)
         if n_buckets is None:
-            staged_replace(
+            staging.write(
                 spark,
                 new_view.withColumn("_last_batch_id", F.lit(batch_id)),
                 view_path,
+                staging.SUPERSEDE,
             )
         else:
             # bootstrap: full build, staged+swapped with the bucket
             # layout in place (a crash mid-bootstrap leaves either
             # nothing or the complete view — never partial buckets a
             # later repair would trust)
-            staged_replace(
+            staging.write(
                 spark,
                 new_view.withColumn(
                     JV_BUCKET_COL, _jv_bucket_expr(join_key, n_buckets)
                 ),
                 view_path,
-                partition_by=[JV_BUCKET_COL],
+                staging.SUPERSEDE,
+                [JV_BUCKET_COL],
             )
     else:
         diff = diff_snapshots(batch_df, prev, primary_key)
         keys = affected_join_keys(diff, join_key)
         if n_buckets is None:
-            staged_replace(
+            staging.write(
                 spark,
                 maintain_join_view(
                     view, batch_df, right_df, join_key, keys, how
                 ).withColumn("_last_batch_id", F.lit(batch_id)),
                 view_path,
+                staging.SUPERSEDE,
             )
         else:
             buckets = sorted(
@@ -2148,7 +2105,7 @@ def join_view_apply_batch(
                 _dynamic_bucket_overwrite(
                     spark, rebuilt, view_path, JV_BUCKET_COL, buckets
                 )
-    staged_replace(spark, batch_df, snapshot_path)
+    staging.write(spark, batch_df, snapshot_path, staging.SUPERSEDE)
 
 
 def continuous_join_view(
@@ -2255,9 +2212,9 @@ def scd2_apply_batch(
     snapshot already folded in diffs empty against the current
     versions and changes nothing — so no batch-id marker is needed.
 
-    r13: the history is replaced through ``maintenance.
-    staged_replace`` (with a ``restore_staged_replace`` at batch
-    start), not a bare overwrite whose crash window scales with
+    r13: the history is replaced by a SUPERSEDE ``staging.write``
+    (with a ``staging.restore`` at batch start), not a bare
+    overwrite whose crash window scales with
     history size. This store is the one streaming state that is NOT
     rebuildable from the latest snapshot — a crash inside a bare
     overwrite would silently RESET history to ``scd2_init`` of the
@@ -2271,16 +2228,12 @@ def scd2_apply_batch(
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
 
-    from mydatasyncer_spark.operators.maintenance import (
-        restore_staged_replace,
-        staged_replace,
-    )
     from mydatasyncer_spark.operators.scd import scd2_apply, scd2_init
 
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    restore_staged_replace(spark, history_path)
+    staging.restore(spark, history_path)
     try:
         hist = spark.read.parquet(history_path)
     except AnalysisException:
@@ -2297,7 +2250,7 @@ def scd2_apply_batch(
             if hist is None
             else scd2_apply(hist, snap, primary_key, ts)
         )
-    staged_replace(spark, hist, history_path)
+    staging.write(spark, hist, history_path, staging.SUPERSEDE)
 
 
 def scd2_table_apply_batch(
@@ -2496,11 +2449,11 @@ def continuous_jaccard_index(
     An index written before the ordered contract (unsorted arrays,
     no order file) is migrated once, before any batch lineage is
     built over it: order frozen from the full index, arrays
-    rewritten sorted through the STAGED rewrite protocol — every
-    batch first replays ``jaccard_restore_staging``, so a crash at
-    any point of the in-place rewrite leaves either the old index or
-    a complete staged copy, never a half-index the stream would
-    mistake for a fresh bootstrap. With success markers disabled the
+    rewritten sorted by one SUPERSEDE staged write — every batch
+    first runs the staging restore, so a crash at any point of the
+    rewrite leaves either the old index or a complete staged copy,
+    never a half-index the stream would mistake for a fresh
+    bootstrap. With success markers disabled the
     staging/backfill gates degrade to readability checks
     (documented crash windows instead of per-batch corpus repairs).
 
@@ -2520,17 +2473,14 @@ def continuous_jaccard_index(
         _CONTAIN_NB_KEY,
         _PREFIX_NB_KEY,
         _PREFIX_T_KEY,
-        _delete_path,
         _id_bucket_modulus,
-        _job_succeeded,
-        _staged_index_rewrite,
         containment_inverted_store,
+        id_bucket_layout,
         id_bucketed_index,
         jaccard_join_incremental,
         jaccard_ordered_index,
         jaccard_prefix_index,
         jaccard_prefix_store,
-        jaccard_restore_staging,
         jaccard_token_order,
     )
 
@@ -2603,7 +2553,7 @@ def continuous_jaccard_index(
         # leaves a complete staged copy; replay it BEFORE building any
         # lineage over the index — otherwise a missing/partial index
         # reads as a fresh bootstrap and the corpus silently vanishes
-        jaccard_restore_staging(spark, index_path)
+        staging.restore(spark, index_path)
         batch = batch_df.select(id_col, text_col).dropDuplicates([id_col])
         try:
             index = spark.read.parquet(index_path)
@@ -2611,25 +2561,14 @@ def continuous_jaccard_index(
             index = None
 
         def complete(path: str) -> bool:
-            # readable AND job-committed (_SUCCESS). When the
-            # deployment disables success markers (the index itself
-            # carries none), fall back to readability — degraded
-            # crash-window protection instead of re-running the
-            # corpus-linear repair every batch.
-            try:
-                spark.read.parquet(path)
-            except AnalysisException:
-                return False
-            return _job_succeeded(spark, path) or not _job_succeeded(
-                spark, index_path
-            )
+            return staging.complete(spark, path, index_path)
 
         if index is not None and not complete(order_loc):
             # index predates the ordered contract (arrays stored
             # unsorted, no/partial order file): one-time migration,
             # BEFORE any batch lineage touches the old index files.
             # The rewrite is staged (crash-safe, see
-            # jaccard_restore_staging); the order file is written
+            # operators/staging.py); the order file is written
             # AFTER the index swap, so any crash replays the
             # migration — re-ordering already-ordered arrays under
             # the same recomputed order is idempotent.
@@ -2639,7 +2578,13 @@ def continuous_jaccard_index(
             migrated = jaccard_ordered_index(
                 index, text_col, id_col, token_order=order
             )
-            _staged_index_rewrite(spark, migrated, index_path)
+            staging.write(
+                spark,
+                migrated,
+                index_path,
+                staging.SUPERSEDE,
+                id_bucket_layout(migrated.columns),
+            )
             # bare overwrite is fine HERE (r13 state-write audit):
             # the order file is vocabulary-sized, derived data, and
             # a crash inside this write is caught by complete() at
@@ -2653,7 +2598,7 @@ def continuous_jaccard_index(
                 # it; the incomplete-store backfill below rebuilds it
                 # from the freshly migrated arrays (and a crash here
                 # replays the same way).
-                _delete_path(spark, prefix_store_path)
+                staging._delete_path(spark, prefix_store_path)
         idx_nb = (
             _id_bucket_modulus(index, id_col)
             if index is not None and ID_BUCKET_COL in index.columns

@@ -2147,10 +2147,11 @@ class TestJaccardPrefixStore:
         reading as a fresh bootstrap."""
         import shutil
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
-            jaccard_compact,
-            jaccard_restore_staging,
+        from mydatasyncer_spark.operators.dedup import jaccard_compact
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            restore,
+            staging_path,
         )
 
         sidx, sorder, store = self._stored(spark, tmp_path, 0.8)
@@ -2163,9 +2164,9 @@ class TestJaccardPrefixStore:
         # overwrite (index dir destroyed)
         spark.read.parquet(idx_path).localCheckpoint(
             eager=True
-        ).write.parquet(idx_path + INDEX_STAGING_SUFFIX)
+        ).write.parquet(staging_path(idx_path, MERGE))
         shutil.rmtree(idx_path)
-        assert jaccard_restore_staging(spark, idx_path) is True
+        assert restore(spark, idx_path) is True
         rows_after = {
             (r["doc_id"], tuple(r["toks"]))
             for r in spark.read.parquet(idx_path).collect()
@@ -2173,11 +2174,11 @@ class TestJaccardPrefixStore:
         assert rows_after == rows_before
         import os
 
-        assert not os.path.exists(idx_path + INDEX_STAGING_SUFFIX)
+        assert not os.path.exists(staging_path(idx_path, MERGE))
         # compaction also self-heals: re-stage + re-crash, then compact
         spark.read.parquet(idx_path).localCheckpoint(
             eager=True
-        ).write.parquet(idx_path + INDEX_STAGING_SUFFIX)
+        ).write.parquet(staging_path(idx_path, MERGE))
         shutil.rmtree(idx_path)
         stats = jaccard_compact(spark, idx_path)
         assert stats["restored_from_staging"] is True
@@ -2191,9 +2192,10 @@ class TestJaccardPrefixStore:
         index with an unmarked staging dir."""
         import shutil
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
-            jaccard_restore_staging,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            restore,
+            staging_path,
         )
 
         self._stored(spark, tmp_path, 0.8)
@@ -2202,7 +2204,7 @@ class TestJaccardPrefixStore:
             (r["doc_id"], tuple(r["toks"]))
             for r in spark.read.parquet(idx_path).collect()
         }
-        staging = idx_path + INDEX_STAGING_SUFFIX
+        staging = staging_path(idx_path, MERGE)
         spark.read.parquet(idx_path).localCheckpoint(
             eager=True
         ).write.parquet(staging)
@@ -2211,11 +2213,11 @@ class TestJaccardPrefixStore:
         os.remove(os.path.join(staging, "_SUCCESS"))  # markers off
         # index still alive: an unmarked staging dir must NOT restore
         # (it could be a half-written stage under enabled markers)
-        assert jaccard_restore_staging(spark, idx_path) is False
+        assert restore(spark, idx_path) is False
         assert os.path.exists(staging)
         # crash mid-overwrite: index gone, unmarked staging readable
         shutil.rmtree(idx_path)
-        assert jaccard_restore_staging(spark, idx_path) is True
+        assert restore(spark, idx_path) is True
         assert {
             (r["doc_id"], tuple(r["toks"]))
             for r in spark.read.parquet(idx_path).collect()

@@ -54,6 +54,286 @@ class TestIdBucketLayout:
         assert parts == [ID_BUCKET_COL, "bucket"]  # caller's list untouched
 
 
+class TestOneStagingModule:
+    """Spark-free structural pin: the staged-rewrite protocol lives in
+    ``operators/staging.py`` alone. No other library module names a
+    staging suffix, checks a ``_SUCCESS`` marker, or renames a path,
+    so a new store cannot grow a private rewrite or restore."""
+
+    def test_only_the_staging_module_touches_the_protocol(self):
+        import ast
+        import pathlib
+
+        import mydatasyncer_spark
+        from mydatasyncer_spark.operators import staging
+
+        suffixes = (
+            staging.INDEX_STAGING_SUFFIX,
+            staging.MERGE_STAGING_SUFFIX,
+            staging.RESTORE_MERGE_SUFFIX,
+        )
+        names = {
+            "INDEX_STAGING_SUFFIX",
+            "MERGE_STAGING_SUFFIX",
+            "RESTORE_MERGE_SUFFIX",
+            "_job_succeeded",
+        }
+        root = pathlib.Path(mydatasyncer_spark.__file__).parent
+        offenders = []
+        for f in sorted(root.rglob("*.py")):
+            if f == pathlib.Path(staging.__file__):
+                continue
+            tree = ast.parse(f.read_text())
+            docstrings = {
+                id(n.body[0].value)
+                for n in ast.walk(tree)
+                if isinstance(
+                    n,
+                    (
+                        ast.Module,
+                        ast.ClassDef,
+                        ast.FunctionDef,
+                        ast.AsyncFunctionDef,
+                    ),
+                )
+                and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)
+            }
+            for n in ast.walk(tree):
+                where = f"{f.relative_to(root)}:{getattr(n, 'lineno', 0)}"
+                if (
+                    isinstance(n, ast.Constant)
+                    and isinstance(n.value, str)
+                    and id(n) not in docstrings
+                    and (
+                        "_SUCCESS" in n.value
+                        or n.value.startswith(suffixes)
+                    )
+                ):
+                    offenders.append(f"{where} literal {n.value!r}")
+                elif (isinstance(n, ast.Name) and n.id in names) or (
+                    isinstance(n, ast.Attribute) and n.attr in names
+                ):
+                    offenders.append(f"{where} names a protocol constant")
+                elif isinstance(n, ast.alias) and n.name in names:
+                    offenders.append(f"{where} imports {n.name}")
+                elif (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "rename"
+                ):
+                    offenders.append(f"{where} calls rename")
+        assert offenders == []
+
+
+class TestStagedRewriteCrashMatrix:
+    """Every state a crashed staged rewrite can leave, for both restore
+    modes, resolved by the one restore a stream calls at batch start.
+    The store starts as OLD (with one replayed duplicate row). A MERGE
+    rewrite (compaction) stages OLD deduplicated; a SUPERSEDE rewrite
+    stages NEW. States: mid_staging (copy partial and unmarked beside
+    the intact store), staged_before_swap (complete copy beside the
+    intact store), mid_swap (complete copy, store deleted),
+    post_crash_append (complete copy, and a writer that skipped the
+    restore bootstrapped APPENDED into the deleted store path)."""
+
+    OLD = [(0, 0), (1, 0), (2, 0), (3, 0), (3, 0)]
+    NEW = [(0, 1), (1, 1), (2, 1), (3, 1)]
+    APPENDED = [(10, 2)]
+    DEDUPED = sorted(set(OLD))
+
+    # (mode, state) -> (restore result, store rows after, copy left)
+    CASES = {
+        ("merge", "mid_staging"): (False, sorted(OLD), True),
+        ("merge", "staged_before_swap"): (True, DEDUPED, False),
+        ("merge", "mid_swap"): (True, DEDUPED, False),
+        ("merge", "post_crash_append"): (
+            True,
+            sorted(DEDUPED + APPENDED),
+            False,
+        ),
+        ("supersede", "mid_staging"): (False, sorted(OLD), False),
+        ("supersede", "staged_before_swap"): (True, NEW, False),
+        ("supersede", "mid_swap"): (True, NEW, False),
+        ("supersede", "post_crash_append"): (True, NEW, False),
+    }
+
+    @pytest.mark.parametrize("mode,state", sorted(CASES))
+    def test_restore_resolves_every_state(self, spark, tmp_path, mode, state):
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            restore,
+            staging_path,
+        )
+
+        schema = "k long, v long"
+        path = str(tmp_path / "store")
+        copy = staging_path(path, mode)
+        spark.createDataFrame(self.OLD, schema).coalesce(1).write.parquet(path)
+        staged = self.DEDUPED if mode == MERGE else self.NEW
+        spark.createDataFrame(staged, schema).write.parquet(copy)
+        if state == "mid_staging":
+            os.remove(os.path.join(copy, "_SUCCESS"))
+        elif state in ("mid_swap", "post_crash_append"):
+            shutil.rmtree(path)
+        if state == "post_crash_append":
+            spark.createDataFrame(self.APPENDED, schema).write.mode(
+                "append"
+            ).parquet(path)
+        want_restored, want_rows, want_copy = self.CASES[(mode, state)]
+        assert restore(spark, path) is want_restored
+        got = sorted(
+            (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
+        )
+        assert got == want_rows
+        assert os.path.exists(copy) is want_copy
+        # resolved states stay resolved: a second restore is a no-op
+        assert restore(spark, path) is False
+
+    def test_recrashed_merge_restore_supersedes(self, spark, tmp_path):
+        """A merge restore that crashed after staging its union leaves
+        a complete ``_restore_merge`` dir, which supersedes the copy
+        and the store on the next call."""
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            RESTORE_MERGE_SUFFIX,
+            restore,
+            staging_path,
+        )
+
+        schema = "k long, v long"
+        path = str(tmp_path / "store")
+        spark.createDataFrame(self.APPENDED, schema).write.parquet(path)
+        spark.createDataFrame(self.DEDUPED, schema).write.parquet(
+            staging_path(path, MERGE)
+        )
+        spark.createDataFrame(self.DEDUPED + self.APPENDED, schema).write.parquet(
+            path + RESTORE_MERGE_SUFFIX
+        )
+        shutil.rmtree(path)
+        assert restore(spark, path) is True
+        got = sorted(
+            (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
+        )
+        assert got == sorted(self.DEDUPED + self.APPENDED)
+        assert not os.path.exists(path + RESTORE_MERGE_SUFFIX)
+        assert not os.path.exists(staging_path(path, MERGE))
+
+    def test_nothing_pending_runs_no_spark_job(self, spark, tmp_path):
+        from mydatasyncer_spark.operators.staging import restore
+
+        path = str(tmp_path / "store")
+        spark.createDataFrame(self.OLD, "k long, v long").write.parquet(path)
+        tracker = spark.sparkContext.statusTracker()
+        group = "staging-fast-path"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            assert restore(spark, path) is False
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                spark.sparkContext.setLocalProperty(prop, None)
+        assert tracker.getJobIdsForGroup(group) == []
+
+
+class TestRebuildCrashSupersedes:
+    """A crash between a rebuild's staging commit and its swap leaves
+    a complete copy under the NEW quantizer beside the intact old
+    index. The restore a stream runs at batch start must adopt that
+    copy whole — one row per id, the old quantizer refused — never
+    union rows encoded under two quantizers."""
+
+    VECS = [
+        (i, [((i * 13 + j * 5) % 17) / 17.0 - 0.5 for j in range(4)])
+        for i in range(1, 33)
+    ]
+
+    def _staged_before_swap(self, tmp_path, path, rebuild):
+        """Run ``rebuild`` on a scratch copy of the store and leave its
+        result where the rebuild stages, beside the intact store."""
+        from mydatasyncer_spark.operators.staging import (
+            SUPERSEDE,
+            staging_path,
+        )
+
+        scratch = str(tmp_path / "scratch")
+        shutil.copytree(path, scratch)
+        stats = rebuild(scratch)
+        shutil.move(scratch, staging_path(path, SUPERSEDE))
+        return stats
+
+    def test_ivf_rebuild_staged_before_swap(self, spark, tmp_path):
+        from mydatasyncer_spark.operators.maintenance import ivf_rebuild
+        from mydatasyncer_spark.operators.similarity import (
+            ivf_centroid_values,
+            ivf_index,
+            ivf_topk_indexed,
+        )
+        from mydatasyncer_spark.operators.staging import restore
+
+        path = str(tmp_path / "ivf")
+        vecs = spark.createDataFrame(
+            self.VECS, "vec_id long, embedding array<double>"
+        )
+        ivf_index(vecs, dim=4, n_centroids=4).write.partitionBy(
+            "bucket"
+        ).parquet(path)
+        self._staged_before_swap(
+            tmp_path,
+            path,
+            lambda p: ivf_rebuild(spark, p, dim=4, n_centroids=4),
+        )
+        assert restore(spark, path) is True
+        stored = spark.read.parquet(path)
+        assert stored.count() == len(self.VECS)
+        assert stored.select("neighbor_id").distinct().count() == len(
+            self.VECS
+        )
+        with pytest.raises(ValueError, match="DIFFERENT centroid"):
+            ivf_topk_indexed(
+                vecs.limit(2), stored, dim=4, k=3,
+                centroids=[ivf_centroid_values(4, c) for c in range(4)],
+            )
+
+    def test_pq_rebuild_staged_before_swap(self, spark, tmp_path):
+        from mydatasyncer_spark.operators.maintenance import pq_rebuild
+        from mydatasyncer_spark.operators.similarity import (
+            pq_codebook_values,
+            pq_index,
+            pq_topk_indexed,
+        )
+        from mydatasyncer_spark.operators.staging import restore
+
+        dim, m, ksub = 8, 4, 4
+        corpus = spark.createDataFrame(
+            [
+                (i, [((i * 7 + j * 3) % 23) / 23.0 + 0.2 for j in range(dim)])
+                for i in range(1, 33)
+            ],
+            "vec_id long, embedding array<double>",
+        )
+        path = str(tmp_path / "pq")
+        pq_index(corpus, dim, m=m, ksub=ksub, n_centroids=4).write.partitionBy(
+            "bucket"
+        ).parquet(path)
+        self._staged_before_swap(
+            tmp_path,
+            path,
+            lambda p: pq_rebuild(
+                spark, p, corpus, dim, m=m, ksub=ksub, n_iter=2
+            ),
+        )
+        assert restore(spark, path) is True
+        stored = spark.read.parquet(path)
+        assert stored.count() == 32
+        assert stored.select("neighbor_id").distinct().count() == 32
+        with pytest.raises(ValueError, match="do not match"):
+            pq_topk_indexed(
+                corpus.limit(2), stored, dim, k=3, n_centroids=4,
+                books=pq_codebook_values(dim, m, ksub),
+            )
+
+
 class TestCompactTable:
     def test_full_row_dedupe_and_file_shrink(self, spark, tmp_path):
         from mydatasyncer_spark.operators.maintenance import compact_table
@@ -83,7 +363,7 @@ class TestCompactTable:
     def test_crash_mid_overwrite_restores_from_staging(
         self, spark, tmp_path
     ):
-        from mydatasyncer_spark.operators.dedup import INDEX_STAGING_SUFFIX
+        from mydatasyncer_spark.operators.staging import MERGE, staging_path
         from mydatasyncer_spark.operators.maintenance import compact_table
 
         path = str(tmp_path / "store")
@@ -94,7 +374,7 @@ class TestCompactTable:
         want = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
         # complete staging, then crash mid in-place overwrite
         spark.read.parquet(path).localCheckpoint(eager=True).write.parquet(
-            path + INDEX_STAGING_SUFFIX
+            staging_path(path, MERGE)
         )
         shutil.rmtree(path)
         stats = compact_table(spark, path)
@@ -102,7 +382,7 @@ class TestCompactTable:
         assert {
             (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
         } == want
-        assert not os.path.exists(path + INDEX_STAGING_SUFFIX)
+        assert not os.path.exists(staging_path(path, MERGE))
 
 
 class TestCompactMinhashAndSurvivors:
@@ -268,8 +548,11 @@ class TestCompactIvfIndex:
     def test_partitioned_crash_restore_preserves_layout(
         self, spark, tmp_path
     ):
-        from mydatasyncer_spark.operators.dedup import INDEX_STAGING_SUFFIX
-        from mydatasyncer_spark.operators.maintenance import restore_staging
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            restore,
+            staging_path,
+        )
         from mydatasyncer_spark.operators.similarity import ivf_index
 
         path = str(tmp_path / "ivf")
@@ -287,9 +570,9 @@ class TestCompactIvfIndex:
         }
         spark.read.parquet(path).localCheckpoint(eager=True).write.partitionBy(
             "bucket"
-        ).parquet(path + INDEX_STAGING_SUFFIX)
+        ).parquet(staging_path(path, MERGE))
         shutil.rmtree(path)
-        assert restore_staging(spark, path, ["bucket"]) is True
+        assert restore(spark, path) is True
         assert glob.glob(os.path.join(path, "bucket=*"))
         assert {
             (r["neighbor_id"], r["bucket"])
@@ -383,7 +666,7 @@ class TestIvfRebuild:
         """A crash after staging completed but mid index-overwrite
         leaves staging + a deleted index; the next ivf_rebuild first
         restores the staged copy, then rebuilds on top of it."""
-        from mydatasyncer_spark.operators.dedup import INDEX_STAGING_SUFFIX
+        from mydatasyncer_spark.operators.staging import SUPERSEDE, staging_path
         from mydatasyncer_spark.operators.maintenance import ivf_rebuild
         from mydatasyncer_spark.operators.similarity import (
             ivf_index,
@@ -395,7 +678,7 @@ class TestIvfRebuild:
         # simulate the crash window: complete staged copy, index gone
         spark.read.parquet(path).localCheckpoint(
             eager=True
-        ).write.partitionBy("bucket").parquet(path + INDEX_STAGING_SUFFIX)
+        ).write.partitionBy("bucket").parquet(staging_path(path, SUPERSEDE))
         shutil.rmtree(path)
         stats = ivf_rebuild(spark, path, dim=4, n_centroids=4)
         assert stats["restored_from_staging"] is True
@@ -700,7 +983,7 @@ class TestCompactionReport:
     rewrite's staging dir surfaced."""
 
     def test_report_crosses_then_recovers(self, spark, tmp_path):
-        from mydatasyncer_spark.operators.dedup import INDEX_STAGING_SUFFIX
+        from mydatasyncer_spark.operators.staging import MERGE, staging_path
         from mydatasyncer_spark.operators.maintenance import (
             compact_table,
             compaction_report,
@@ -727,9 +1010,9 @@ class TestCompactionReport:
         # replay, this fabricated one is not)
         spark.createDataFrame(
             rows[:3], "id_a long, id_b long, score double"
-        ).write.parquet(path + INDEX_STAGING_SUFFIX)
+        ).write.parquet(staging_path(path, MERGE))
         assert compaction_report(spark, path)["pending_staging"] is True
-        shutil.rmtree(path + INDEX_STAGING_SUFFIX)
+        shutil.rmtree(staging_path(path, MERGE))
         compact_table(spark, path)
         after = compaction_report(spark, path)
         assert after["rows"] == 50
@@ -893,8 +1176,9 @@ class TestStagedProtocolRandomized:
         import random
         import shutil as sh
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
         from mydatasyncer_spark.operators.maintenance import (
             compact_table,
@@ -945,7 +1229,7 @@ class TestStagedProtocolRandomized:
                     spark.read.parquet(path).localCheckpoint(
                         eager=True
                     ).write.mode("overwrite").parquet(
-                        path + INDEX_STAGING_SUFFIX
+                        staging_path(path, MERGE)
                     )
                     sh.rmtree(path)
                 else:
@@ -965,8 +1249,9 @@ class TestStagedProtocolRandomized:
         import random
         import shutil as sh
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
         from mydatasyncer_spark.operators.maintenance import (
             compact_table,
@@ -1017,7 +1302,7 @@ class TestStagedProtocolRandomized:
                         eager=True
                     ).write.mode("overwrite").partitionBy(
                         "bucket"
-                    ).parquet(path + INDEX_STAGING_SUFFIX)
+                    ).parquet(staging_path(path, MERGE))
                     sh.rmtree(path)
                 else:
                     compact_table(
@@ -1206,8 +1491,9 @@ class TestPqMaintenance:
     def test_rebuild_crash_restores_then_rebuilds(
         self, spark, tmp_path
     ):
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            SUPERSEDE,
+            staging_path,
         )
         from mydatasyncer_spark.operators.maintenance import pq_rebuild
         from mydatasyncer_spark.operators.similarity import (
@@ -1221,7 +1507,7 @@ class TestPqMaintenance:
         self._grown(spark, path, corpus)
         spark.read.parquet(path).localCheckpoint(
             eager=True
-        ).write.partitionBy("bucket").parquet(path + INDEX_STAGING_SUFFIX)
+        ).write.partitionBy("bucket").parquet(staging_path(path, SUPERSEDE))
         shutil.rmtree(path)
         stats = pq_rebuild(spark, path, corpus, self.DIM, n_iter=3)
         assert stats["restored_from_staging"] is True
@@ -1611,8 +1897,9 @@ class TestPqStoreRandomized:
         import random
         import shutil as sh
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
         from mydatasyncer_spark.operators.maintenance import (
             compact_pq_index,
@@ -1710,14 +1997,12 @@ class TestPqStoreRandomized:
                         eager=True
                     ).write.mode("overwrite").partitionBy(
                         "bucket"
-                    ).parquet(path + INDEX_STAGING_SUFFIX)
+                    ).parquet(staging_path(path, MERGE))
                     sh.rmtree(path)
                     # next maintenance/append must restore first
-                    from mydatasyncer_spark.operators.maintenance import (
-                        restore_staging,
-                    )
+                    from mydatasyncer_spark.operators.staging import restore
 
-                    restore_staging(spark, path, ["bucket"])
+                    restore(spark, path)
                 elif op < 0.85:
                     compact_pq_index(spark, path)
                     assert probe_matches_batch(), seed

@@ -1046,7 +1046,7 @@ class TestStagedProtocolFuzz:
 
 
 class TestStagedReplaceEmptyPartitioned:
-    """r14 (advisor finding): ``staged_replace(partition_by=...)`` of
+    """r14 (advisor finding): a partitioned staged write of
     an EMPTY frame used to stage a dir holding only ``_SUCCESS`` — no
     schema-bearing file — so the prove-readable count raised and the
     caller's batch failed on every retry (the empty bucketed
@@ -1056,13 +1056,11 @@ class TestStagedReplaceEmptyPartitioned:
     def test_empty_partitioned_replace_succeeds_and_reads(
         self, spark, tmp_path
     ):
-        from mydatasyncer_spark.operators.maintenance import (
-            staged_replace,
-        )
+        from mydatasyncer_spark.operators.staging import SUPERSEDE, write
 
         path = str(tmp_path / "store")
         empty = spark.createDataFrame([], "k long, v string, b int")
-        rows = staged_replace(spark, empty, path, partition_by=["b"])
+        rows = write(spark, empty, path, SUPERSEDE, partition_by=["b"])
         assert rows == 0
         got = spark.read.parquet(path)
         assert got.count() == 0
@@ -1071,7 +1069,7 @@ class TestStagedReplaceEmptyPartitioned:
         frame = spark.createDataFrame(
             [(1, "x", 0), (2, "y", 1)], "k long, v string, b int"
         )
-        assert staged_replace(spark, frame, path, partition_by=["b"]) == 2
+        assert write(spark, frame, path, SUPERSEDE, partition_by=["b"]) == 2
         import os
 
         assert os.path.isdir(os.path.join(path, "b=0"))

@@ -2002,7 +2002,7 @@ class TestContinuousJoinViewBucketed:
     def test_empty_bucketed_bootstrap_then_growth(self, spark, tmp_path):
         """An INNER view whose first batch matches nothing bootstraps
         an EMPTY bucketed store. A partitioned write of zero rows has
-        no schema-bearing file (staged_replace would fail its
+        no schema-bearing file (the staged write would fail its
         prove-readable count on every retry), so the empty store is
         staged unpartitioned — and the first real repair clears that
         root-file form before laying down partition dirs."""
@@ -2507,9 +2507,10 @@ class TestContinuousJaccardIndex:
 
         from pyspark.sql import functions as F
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
-            jaccard_restore_staging,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            restore,
+            staging_path,
         )
         from mydatasyncer_spark.streaming.continuous import (
             continuous_jaccard_index,
@@ -2572,10 +2573,10 @@ class TestContinuousJaccardIndex:
         spark.read.parquet(index).localCheckpoint(
             eager=True
         ).write.partitionBy("_id_bucket").parquet(
-            index + INDEX_STAGING_SUFFIX
+            staging_path(index, MERGE)
         )
         shutil.rmtree(index)
-        assert jaccard_restore_staging(spark, index) is True
+        assert restore(spark, index) is True
         assert glob.glob(index + "/_id_bucket=*")
         assert spark.read.parquet(index).count() == 4
 
@@ -3041,8 +3042,9 @@ class TestRestoreFirstDiscipline:
         import json as _json
         import shutil as sh
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
         from mydatasyncer_spark.streaming.continuous import (
             continuous_dedup,
@@ -3078,7 +3080,7 @@ class TestRestoreFirstDiscipline:
         # crashed compaction: complete staged copy, index deleted
         spark.read.parquet(index_path).localCheckpoint(
             eager=True
-        ).write.parquet(index_path + INDEX_STAGING_SUFFIX)
+        ).write.parquet(staging_path(index_path, MERGE))
         sh.rmtree(index_path)
         # the next batch lands INSIDE the window: a near-dup of the
         # pre-crash doc A and a fresh doc
@@ -3106,7 +3108,7 @@ class TestRestoreFirstDiscipline:
         assert idx_ids == {1, 2, 11}
         import os
 
-        assert not os.path.exists(index_path + INDEX_STAGING_SUFFIX)
+        assert not os.path.exists(staging_path(index_path, MERGE))
 
 
 class TestContinuousLshIndex:
@@ -3962,8 +3964,9 @@ class TestContinuousCuration:
         paths FIRST, like dedup_apply_batch."""
         import shutil
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
 
         in_dir = tmp_path_factory.mktemp("curw_in")
@@ -3981,7 +3984,7 @@ class TestContinuousCuration:
         shutil.rmtree(paths["keys"])
         spark.read.parquet(paths["index"]).localCheckpoint(
             eager=True
-        ).write.parquet(paths["index"] + INDEX_STAGING_SUFFIX)
+        ).write.parquet(staging_path(paths["index"], MERGE))
         shutil.rmtree(paths["index"])
         # full replay (fresh checkpoint) lands inside the window: the
         # restore must run before the guard, which then skips ids 1-2
@@ -3994,7 +3997,7 @@ class TestContinuousCuration:
         assert idx_ids == {1, 2}
         import os
 
-        assert not os.path.exists(paths["index"] + INDEX_STAGING_SUFFIX)
+        assert not os.path.exists(staging_path(paths["index"], MERGE))
 
 
 class TestContinuousCurationModelGate:
@@ -4674,8 +4677,9 @@ class TestContentKeyStoreMaintenance:
         import os
         import shutil
 
-        from mydatasyncer_spark.operators.dedup import (
-            INDEX_STAGING_SUFFIX,
+        from mydatasyncer_spark.operators.staging import (
+            MERGE,
+            staging_path,
         )
         from mydatasyncer_spark.operators.maintenance import (
             compact_content_keys,
@@ -4734,7 +4738,7 @@ class TestContentKeyStoreMaintenance:
         spark.read.parquet(keys_path).localCheckpoint(
             eager=True
         ).write.partitionBy("_ckey_bucket").parquet(
-            keys_path + INDEX_STAGING_SUFFIX
+            staging_path(keys_path, MERGE)
         )
         shutil.rmtree(keys_path)
         (in_dir / "b2.json").write_text(
@@ -4742,7 +4746,7 @@ class TestContentKeyStoreMaintenance:
         )
         drain(str(out / "ckpt"))
         assert _glob.glob(os.path.join(keys_path, "_ckey_bucket=*"))
-        assert not os.path.exists(keys_path + INDEX_STAGING_SUFFIX)
+        assert not os.path.exists(staging_path(keys_path, MERGE))
         ids = {
             r["doc_id"]
             for r in spark.read.parquet(str(out / "survivors")).collect()
@@ -5150,7 +5154,7 @@ class TestRollupCrashStateFuzz:
     # full-suite-only (pytest.ini fast gate); run with -m slow
     pytestmark = pytest.mark.slow
     """r13: randomized PROTOCOL-REACHABLE crash states injected
-    between continuous-rollup batches — the staged_replace twin of
+    between continuous-rollup batches — the staged-write twin of
     the model-store fuzz. After any drawn sequence of (snapshot,
     crash injection, replay?) steps, the state store must equal a
     fresh rollup of the LAST snapshot: the marker guard, the restores
