@@ -1442,25 +1442,22 @@ def _stage_compaction(
     parts: list[str],
     restored: bool,
     files_per_billion_rows: int = 2000,
+    mode: str = staging.MERGE,
 ) -> dict:
-    """Size a deduplicated store frame and stage it once as a MERGE
-    rewrite of ``path`` — the shared tail of every compaction.
-    ``files_per_billion_rows`` per 1e9 PRE-dedupe rows (``raw``, the
-    count the caller already took), floor 1. A partitioned layout is
-    clustered on its key, so each directory lands few large files
-    instead of one sliver per task; an unpartitioned one coalesces
-    (no extra shuffle) unless it must grow. Returns ``{"rows",
-    "removed_rows", "files", "restored_from_staging"}``."""
+    """Size a deduplicated store frame and stage it once as a
+    ``mode`` rewrite of ``path`` — the shared tail of every
+    compaction. ``files_per_billion_rows`` per 1e9 PRE-dedupe rows
+    (``raw``, the count the caller already took), floor 1. The frame
+    is repartitioned, never coalesced, so the dedupe above it keeps
+    full shuffle parallelism; a partitioned layout is clustered on
+    its key, so each directory lands few large files instead of one
+    sliver per task. Returns ``{"rows", "removed_rows", "files",
+    "restored_from_staging"}``."""
     import math
 
     n_files = max(1, math.ceil(raw * files_per_billion_rows / 1e9))
-    if parts:
-        sized = deduped.repartition(n_files, *[F.col(c) for c in parts])
-    elif n_files <= int(spark.conf.get("spark.sql.shuffle.partitions")):
-        sized = deduped.coalesce(n_files)
-    else:
-        sized = deduped.repartition(n_files)
-    rows = staging.write(spark, sized, path, staging.MERGE, parts)
+    sized = deduped.repartition(n_files, *[F.col(c) for c in parts])
+    rows = staging.write(spark, sized, path, mode, parts)
     return {
         "rows": rows,
         "removed_rows": raw - rows,
@@ -1479,18 +1476,27 @@ def _compact_id_index(
     """Dedupe an id-keyed index by id and (re)bucket it in ONE staged
     write: an explicit ``n_id_buckets`` converts (or re-buckets) the
     :func:`id_bucketed_index` layout, otherwise an existing bucketed
-    layout is kept under its recorded modulus."""
+    layout is kept under its recorded modulus. A layout change stages
+    as SUPERSEDE: a union with the old layout would keep two rows per
+    id, one in a directory the new modulus never prunes to."""
     restored = staging.restore(spark, path)
     index = spark.read.parquet(path)
-    target_nb = n_id_buckets
-    if target_nb is None and ID_BUCKET_COL in index.columns:
-        target_nb = _id_bucket_modulus(index, id_col)
+    bucketed = ID_BUCKET_COL in index.columns
+    mode = staging.MERGE
+    if n_id_buckets is None:
+        target_nb = _id_bucket_modulus(index, id_col) if bucketed else None
+    else:
+        target_nb = int(n_id_buckets)
+        if not bucketed or target_nb != index.schema[id_col].metadata.get(
+            _ID_NB_KEY
+        ):
+            mode = staging.SUPERSEDE
     deduped = index.dropDuplicates([id_col])
     if ID_BUCKET_COL in deduped.columns:
         deduped = deduped.drop(ID_BUCKET_COL)
     parts = []
     if target_nb is not None:
-        deduped = id_bucketed_index(deduped, id_col, int(target_nb))
+        deduped = id_bucketed_index(deduped, id_col, target_nb)
         parts = [ID_BUCKET_COL]
     return _stage_compaction(
         spark,
@@ -1500,6 +1506,7 @@ def _compact_id_index(
         parts,
         restored,
         files_per_billion_rows,
+        mode,
     )
 
 
@@ -1518,7 +1525,7 @@ def jaccard_compact(
     and crash replays may leave duplicate store rows (harmless for
     exactness, but paid on every scan) or, under per-task-visible
     committers, duplicate index rows. This rewrites the index
-    deduplicated by id and coalesced, and — when
+    deduplicated by id and file-count-sized, and — when
     ``prefix_store_path`` is given — REBUILDS the store from the
     compacted index (same threshold and bucket count, read back from
     the store's own ``_ptok`` metadata), which removes duplicate and
@@ -1543,8 +1550,9 @@ def jaccard_compact(
     Run it between drains/ingests (like any layout maintenance — it
     overwrites the paths a concurrent ingest would be reading). The
     frozen order file is untouched: compaction reorders FILES, never
-    tokens. The index rewrite is one MERGE write of
-    :mod:`~mydatasyncer_spark.operators.staging`: a crash leaves the
+    tokens. The index rewrite is one staged write of
+    :mod:`~mydatasyncer_spark.operators.staging` (MERGE, or SUPERSEDE
+    when ``n_id_buckets`` changes the layout): a crash leaves the
     old index or a staged copy that the next compaction, or the
     streaming twin's next batch, restores; a crash mid-STORE-rebuild
     is healed the same way the streaming backfill is (the store's
@@ -1710,9 +1718,9 @@ def jaccard_refreeze(
         )
     # order first: from here on, any crash reads as "order missing"
     # (the migration trigger) — never as stale-order-over-new-arrays
-    staging._delete_path(spark, order_loc)
+    staging.delete(spark, order_loc)
     if prefix_store_path is not None:
-        staging._delete_path(spark, prefix_store_path)
+        staging.delete(spark, prefix_store_path)
     docs = staging.write(
         spark,
         reordered,

@@ -88,9 +88,8 @@ def compact_table(
     files instead of one sliver per original file.
 
     File sizing matches ``jaccard_compact``: ``files_per_billion_rows``
-    per 1e9 rows of the store as read (pre-dedupe), floor 1 — coalesce
-    (no shuffle) when shrinking an unpartitioned store. The rewrite is
-    one MERGE write of :mod:`~mydatasyncer_spark.operators.staging`.
+    per 1e9 rows of the store as read (pre-dedupe), floor 1. The
+    rewrite is one MERGE write of :mod:`~mydatasyncer_spark.operators.staging`.
     Returns ``{"rows", "removed_rows", "files",
     "restored_from_staging"}``. WHEN to run it:
     :func:`compaction_report` measures the store's current

@@ -13,18 +13,19 @@ is resolved before anything builds on a missing or stale store.
 The rewrite records how its copy must be restored before the first
 byte is written: the staging directory's name carries the mode.
 
-- ``MERGE`` (``path + "_staging_merge"``) is for compactions, whose
-  copy holds the same content as the store. A store that reads back
-  complete beside a complete copy may hold rows appended after the
-  crash, so the restore takes the union of both with full-row
-  duplicates dropped. The union is staged to ``path +
+- ``MERGE`` (``path + "_staging_merge"``) is for compactions that
+  keep the store's layout, whose copy holds the same content as the
+  store. A store that reads back complete beside a complete copy may
+  hold rows appended after the crash, so the restore takes the union
+  of both with full-row duplicates dropped. The union is staged to ``path +
   "_restore_merge"`` first; a complete merge dir supersedes on the
   next call if the restore itself crashes.
 - ``SUPERSEDE`` (``path + "_staging"``) is for every other rewrite:
-  rebuilds, refreezes, migrations, whole-replace state and model
-  stores. The complete copy is the newest version and replaces the
-  store; mixing it with the old one would mix two quantizers, two
-  token orders or two training runs.
+  rebuilds, refreezes, migrations, whole-replace state, model stores
+  and compactions that change the id-bucket layout. The complete
+  copy is the newest version and replaces the store; mixing it with
+  the old one would mix two quantizers, two token orders, two
+  training runs or two bucket moduli.
 
 Restore states, the same for both modes:
 
@@ -43,6 +44,14 @@ Restore states, the same for both modes:
 
 Rewrites and restores are not run concurrently with ingestion into
 the same store.
+
+Upgrading a store with a pending copy: releases before this module
+staged every rewrite at ``path + "_staging"`` and let the caller's
+restore choose union or supersede. Such a copy now reads as
+SUPERSEDE, so a leftover compaction copy would replace a store that
+took appends after the crash. Run the old release's restore (or its
+next compaction or stream batch) on every store before upgrading;
+:func:`pending` is True for a store that still holds one.
 """
 
 from __future__ import annotations
@@ -79,7 +88,8 @@ def _job_succeeded(spark, path: str) -> bool:
     return fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS"))
 
 
-def _delete_path(spark, path: str) -> None:
+def delete(spark, path: str) -> None:
+    """Recursively delete ``path`` (a no-op when it is absent)."""
     _, fs, p = _hadoop_fs(spark, path)
     fs.delete(p, True)
 
@@ -183,10 +193,10 @@ def _adopt(spark, staging: str, path: str, mode: str, verify) -> bool:
         ok = verify(staging) if verify else _readable(spark, staging)
         if _readable(spark, path) or not ok:
             if mode == SUPERSEDE:
-                _delete_path(spark, staging)
+                delete(spark, staging)
             return False
     elif not _readable(spark, staging):
-        _delete_path(spark, staging)
+        delete(spark, staging)
         return False
     if mode == MERGE and _job_succeeded(spark, path) and _readable(
         spark, path
@@ -203,7 +213,7 @@ def _adopt(spark, staging: str, path: str, mode: str, verify) -> bool:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(merged)
-        _delete_path(spark, staging)
+        delete(spark, staging)
         _swap(spark, merged, path)
         return True
     _swap(spark, staging, path)
@@ -231,11 +241,11 @@ def restore(spark, path: str, verify=None) -> bool:
         if _job_succeeded(spark, merged) and _readable(spark, merged):
             # a merge restore crashed after staging its union, which
             # holds the staged copy and the store at merge time
-            _delete_path(spark, staging_path(path, MERGE))
+            delete(spark, staging_path(path, MERGE))
             _swap(spark, merged, path)
             restored = True
         else:
-            _delete_path(spark, merged)
+            delete(spark, merged)
     for mode in _SUFFIX:
         staging = staging_path(path, mode)
         if fs.exists(jvm.org.apache.hadoop.fs.Path(staging)):

@@ -1918,7 +1918,7 @@ def _dynamic_bucket_overwrite(
     )
     for b in buckets:
         if b not in present:
-            staging._delete_path(spark, f"{path}/{bucket_col}={b}")
+            staging.delete(spark, f"{path}/{bucket_col}={b}")
 
 
 def join_view_apply_batch(
@@ -2560,10 +2560,9 @@ def continuous_jaccard_index(
         except AnalysisException:
             index = None
 
-        def complete(path: str) -> bool:
-            return staging.complete(spark, path, index_path)
-
-        if index is not None and not complete(order_loc):
+        if index is not None and not staging.complete(
+            spark, order_loc, index_path
+        ):
             # index predates the ordered contract (arrays stored
             # unsorted, no/partial order file): one-time migration,
             # BEFORE any batch lineage touches the old index files.
@@ -2587,8 +2586,9 @@ def continuous_jaccard_index(
             )
             # bare overwrite is fine HERE (r13 state-write audit):
             # the order file is vocabulary-sized, derived data, and
-            # a crash inside this write is caught by complete() at
-            # the next batch start, which replays the migration
+            # a crash inside this write is caught by
+            # staging.complete() at the next batch start, which
+            # replays the migration
             order.write.mode("overwrite").parquet(order_loc)
             index = spark.read.parquet(index_path)
             if prefix_store_path is not None:
@@ -2598,7 +2598,7 @@ def continuous_jaccard_index(
                 # it; the incomplete-store backfill below rebuilds it
                 # from the freshly migrated arrays (and a crash here
                 # replays the same way).
-                staging._delete_path(spark, prefix_store_path)
+                staging.delete(spark, prefix_store_path)
         idx_nb = (
             _id_bucket_modulus(index, id_col)
             if index is not None and ID_BUCKET_COL in index.columns
@@ -2623,7 +2623,9 @@ def continuous_jaccard_index(
                 order = spark.read.parquet(order_loc)
                 corpus_prefix = None
                 if prefix_store_path is not None:
-                    if not complete(prefix_store_path):
+                    if not staging.complete(
+                        spark, prefix_store_path, index_path
+                    ):
                         # store absent OR half-written (crash mid-
                         # backfill): rebuild from the stored ordered
                         # arrays — the only corpus-linear step; a
@@ -2645,7 +2647,9 @@ def continuous_jaccard_index(
                     # by this stream — same backfill/provenance
                     # lifecycle as the prefix store (order-free, so
                     # migration never touches it)
-                    if not complete(containment_store_path):
+                    if not staging.complete(
+                        spark, containment_store_path, index_path
+                    ):
                         write_cstore(index, "overwrite")
                     elif not cstore_matches_config(
                         spark.read.parquet(containment_store_path)
@@ -2671,7 +2675,7 @@ def continuous_jaccard_index(
                 # audit): bootstrap writes the order BEFORE any index
                 # rows exist, so a crash inside it re-bootstraps; a
                 # partial order beside a live index is caught by
-                # complete() above
+                # staging.complete() above
                 order.write.mode("overwrite").parquet(order_loc)
                 order = spark.read.parquet(order_loc)
                 pairs = jaccard_self_join(

@@ -334,6 +334,72 @@ class TestRebuildCrashSupersedes:
             )
 
 
+class TestLayoutCompactionCrashSupersedes:
+    """A compaction that converts or re-buckets the id-bucket layout
+    stages as SUPERSEDE. A crash between its staging commit and its
+    swap must restore to the new layout alone: one row per id, every
+    row in its bucket under the new modulus — never a union of rows
+    bucketed under two moduli (or a union that fails on a column only
+    one side has)."""
+
+    DOCS = [(i, f"doc {i} alpha beta gamma {i % 5}") for i in range(16)]
+
+    @pytest.mark.parametrize(
+        "kind,stored_nb,target_nb",
+        [("jaccard", None, 4), ("minhash", None, 4), ("minhash", 4, 8)],
+    )
+    def test_staged_before_swap(
+        self, spark, tmp_path, monkeypatch, kind, stored_nb, target_nb
+    ):
+        from mydatasyncer_spark.operators import staging
+        from mydatasyncer_spark.operators.dedup import (
+            ID_BUCKET_COL,
+            id_bucketed_index,
+            jaccard_compact,
+            jaccard_prefix_index,
+            minhash_signature,
+        )
+        from mydatasyncer_spark.operators.maintenance import (
+            compact_minhash_index,
+        )
+
+        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        index = (
+            jaccard_prefix_index(docs)
+            if kind == "jaccard"
+            else minhash_signature(docs)
+        )
+        path = str(tmp_path / "idx")
+        if stored_nb is not None:
+            index = id_bucketed_index(index, n_id_buckets=stored_nb)
+        for rows in (index, index.filter("doc_id < 4")):  # one replay
+            w = rows.write.mode("append")
+            if stored_nb is not None:
+                w = w.partitionBy(ID_BUCKET_COL)
+            w.parquet(path)
+        compact = jaccard_compact if kind == "jaccard" else compact_minhash_index
+
+        def crash(*args):
+            raise RuntimeError("crash before swap")
+
+        with monkeypatch.context() as m:
+            m.setattr(staging, "_swap", crash)
+            with pytest.raises(RuntimeError, match="crash before swap"):
+                compact(spark, path, n_id_buckets=target_nb)
+        assert os.path.exists(staging.staging_path(path, staging.SUPERSEDE))
+        assert spark.read.parquet(path).count() == len(self.DOCS) + 4
+        assert staging.restore(spark, path) is True
+        stored = spark.read.parquet(path)
+        assert stored.count() == len(self.DOCS)
+        assert stored.select("doc_id").distinct().count() == len(self.DOCS)
+        assert stored.schema["doc_id"].metadata["id_bucket_count"] == target_nb
+        assert stored.filter(
+            F.col(ID_BUCKET_COL)
+            != F.pmod(F.xxhash64("doc_id"), F.lit(target_nb))
+        ).isEmpty()
+        assert staging.pending(spark, path) is False
+
+
 class TestCompactTable:
     def test_full_row_dedupe_and_file_shrink(self, spark, tmp_path):
         from mydatasyncer_spark.operators.maintenance import compact_table
