@@ -27,9 +27,11 @@ from mydatasyncer_spark.contract import (
 from mydatasyncer_spark.functions.canonical import canonical_col
 from mydatasyncer_spark.operators.columns import determine_sync_columns
 from mydatasyncer_spark.operators.diff import (
+    DiffResult,
     detect_deletes,
     detect_inserts,
     detect_updates,
+    diff_changes,
     diff_counts,
     diff_snapshots,
 )
@@ -883,20 +885,21 @@ def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply the file-vs-db diff's deltas — the oracle recomputes the
     rollup DIRECTLY from the file side, so a hash match proves
     maintained state == full recompute (including group moves from
-    updates and group drops from deletes). r14: deltas derived via
-    the one-pass classification join (maintain_rollup_onepass) —
-    one narrow full outer instead of the five wide diff-leg joins;
-    bit-identical output (equivalence-pinned + oracle)."""
-    from mydatasyncer_spark.operators.ivm import (
-        maintain_rollup_onepass,
-        rollup_state,
-    )
+    updates and group drops from deletes). The deltas come from one
+    classification join (diff_changes) whose payload is just the
+    group and value columns."""
+    from mydatasyncer_spark.operators.ivm import maintain_rollup, rollup_state
 
     f, d = snapshot_file(spark, sf_dir), snapshot_db(spark, sf_dir)
     state = rollup_state(d, ["o_orderstatus"], "o_totalprice")
-    new_state = maintain_rollup_onepass(
-        state, f, d, "o_orderkey", f.columns, ["o_orderstatus"],
-        "o_totalprice",
+    diff = DiffResult.of_changes(
+        diff_changes(
+            f, d, "o_orderkey", f.columns,
+            payload=["o_orderstatus", "o_totalprice"],
+        )
+    )
+    new_state = maintain_rollup(
+        state, diff, ["o_orderstatus"], "o_totalprice"
     )
     return new_state.select(
         "o_orderstatus",
@@ -912,12 +915,11 @@ def ivm_join_view_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted / updated rows contribute their custkeys — before AND
     after for updates). The oracle joins the file side directly, so a
     hash match proves maintained view == full recompute while the
-    maintenance itself is delta-sized anti/semi joins. r14: the
-    affected-key scope comes from the one-pass classification join
-    (affected_join_keys_onepass) instead of reading one column off
-    the four wide diff-leg joins; same distinct key set."""
+    maintenance itself is delta-sized anti/semi joins. The
+    affected-key scope comes from one classification join
+    (diff_changes) whose payload is just the join key."""
     from mydatasyncer_spark.operators.ivm import (
-        affected_join_keys_onepass,
+        affected_join_keys,
         join_view_state,
         maintain_join_view,
     )
@@ -933,9 +935,10 @@ def ivm_join_view_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times; pinned, it runs once and its now-known (tiny) size lets
     # AQE broadcast the scope joins. Exactly what the streaming twin
     # does per batch. Same key set, same result.
-    keys = affected_join_keys_onepass(
-        f, d, "o_orderkey", f.columns, "o_custkey"
-    ).localCheckpoint(eager=True)
+    diff = DiffResult.of_changes(
+        diff_changes(f, d, "o_orderkey", f.columns, payload=["o_custkey"])
+    )
+    keys = affected_join_keys(diff, "o_custkey").localCheckpoint(eager=True)
     view = maintain_join_view(state, f, c, "o_custkey", keys)
     return view.select(
         "o_orderkey",
@@ -966,11 +969,11 @@ def ivm_join_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plain-equality repair legs would keep stale rows and drop the
     recomputes). The oracle left-joins the file side directly, so a
     hash match proves maintained == full recompute including the
-    NULL group. r14: affected keys via the one-pass classification
-    join (affected_join_keys_onepass) — NULL keys ride the same
-    explode legs, so the NULL group's repair scope is unchanged."""
+    NULL group. Affected keys come from one classification join
+    (diff_changes, payload = the join key); NULL keys are images
+    like any other, so the NULL group is in the repair scope."""
     from mydatasyncer_spark.operators.ivm import (
-        affected_join_keys_onepass,
+        affected_join_keys,
         join_view_state,
         maintain_join_view,
     )
@@ -984,9 +987,10 @@ def ivm_join_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta-sized key set pinned once for the three scope legs (r14
     # — see ivm_join_view_orders); NULL keys ride the materialized
     # set unchanged.
-    keys = affected_join_keys_onepass(
-        f, d, "o_orderkey", f.columns, "o_custkey"
-    ).localCheckpoint(eager=True)
+    diff = DiffResult.of_changes(
+        diff_changes(f, d, "o_orderkey", f.columns, payload=["o_custkey"])
+    )
+    keys = affected_join_keys(diff, "o_custkey").localCheckpoint(eager=True)
     view = maintain_join_view(state, f, c, "o_custkey", keys, how="left")
     return view.select(
         "o_orderkey",
@@ -1709,20 +1713,24 @@ def incremental_rollup_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored bound trigger group-targeted repair (semi-join-pruned fact
     re-aggregation of ONLY those groups); the oracle recomputes from
     the file side, so a hash match proves maintained == recompute.
-    r14: deltas + damage detection via the one-pass classification
-    join (maintain_rollup_minmax_onepass) — one narrow full outer +
-    one aggregation instead of eight wide diff-leg join subtrees;
-    bit-identical output (equivalence-pinned + oracle)."""
+    Deltas and damage detection come from one classification join
+    (diff_changes, payload = group and value columns) and one
+    aggregation."""
     from mydatasyncer_spark.operators.ivm import (
-        maintain_rollup_minmax_onepass,
+        maintain_rollup_minmax,
         rollup_state_minmax,
     )
 
     f, d = snapshot_file(spark, sf_dir), snapshot_db(spark, sf_dir)
     state = rollup_state_minmax(d, ["o_orderstatus"], "o_totalprice")
-    new_state = maintain_rollup_minmax_onepass(
-        state, f, d, f, "o_orderkey", f.columns, ["o_orderstatus"],
-        "o_totalprice",
+    diff = DiffResult.of_changes(
+        diff_changes(
+            f, d, "o_orderkey", f.columns,
+            payload=["o_orderstatus", "o_totalprice"],
+        )
+    )
+    new_state = maintain_rollup_minmax(
+        state, diff, f, ["o_orderstatus"], "o_totalprice"
     )
     return new_state.select(
         "o_orderstatus",

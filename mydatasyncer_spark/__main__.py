@@ -2,10 +2,11 @@
 
 Mirrors the reference's flag surface (ref: main.go:40-51: ``-config``
 path + ``-dry-run``) and run lifecycle (ref: RunApp, main.go:59-134),
-with two engine-specific additions: ``--staging`` picks the staged
-set-based write path, and the backend comes from the config's
-``db.url`` (a JDBC URL, dialect inferred from its scheme) or the
-``--sqlite`` convenience flag for local/portable use.
+with one engine-specific addition: the backend comes from the
+config's ``db.url`` (a JDBC URL, dialect inferred from its scheme) or
+the ``--sqlite`` convenience flag for local/portable use. The backend
+picks the write path: a JDBC target syncs through staged set-based
+writes, a sqlite file through the per-row batched apply.
 """
 
 from __future__ import annotations
@@ -84,11 +85,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         help="compute and print per-table plans; write nothing",
     )
     parser.add_argument(
-        "--staging",
-        action="store_true",
-        help="use staged set-based writes (Spark-parallel JDBC staging)",
-    )
-    parser.add_argument(
         "--sqlite", help="sync into this sqlite file instead of db.url"
     )
     args = parser.parse_args(argv)
@@ -109,7 +105,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         backend = build_backend(spark, config, args.sqlite)
         from mydatasyncer_spark.syncer import sync
 
-        outcome = sync(spark, backend, config, staging=args.staging)
+        outcome = sync(spark, backend, config)
         if outcome.dry_run:
             for plan in outcome.plans.values():
                 print(plan.render())

@@ -169,21 +169,6 @@ def detect_updates(
     )
 
 
-def changed_columns(
-    file_df: DataFrame, db_df: DataFrame, columns: list[str]
-) -> Column:
-    """Array of column names whose canonical values differ — used by
-    the dry-run report's changed-vs-unchanged display
-    (ref: dbsync.go:207-218)."""
-    flags = [
-        F.when(
-            canonical_col(file_df, c) != canonical_col(db_df, c), F.lit(c)
-        )
-        for c in columns
-    ]
-    return F.array_compact(F.array(*flags))
-
-
 def diff_counts(
     file_df: DataFrame,
     db_df: DataFrame,
@@ -210,6 +195,18 @@ def diff_counts(
     return _classify_counts(fs, ds, delete_not_in_file)
 
 
+def _classify() -> tuple[Column, Column, Column]:
+    """``(is_insert, is_update, is_delete)`` over the full outer join
+    of per-side fingerprints ``_f_fp`` (file) and ``_d_fp`` (db) — the
+    one classification rule of every one-pass diff. A present side's
+    fingerprint is never NULL (xxhash64 over strings), so a NULL
+    fingerprint means that side is absent."""
+    is_ins = F.col("_d_fp").isNull()
+    is_del = F.col("_f_fp").isNull()
+    is_upd = (~is_ins) & (~is_del) & (F.col("_f_fp") != F.col("_d_fp"))
+    return is_ins, is_upd, is_del
+
+
 def _classify_counts(
     fs: DataFrame, ds: DataFrame, delete_not_in_file: bool
 ) -> DataFrame:
@@ -218,9 +215,7 @@ def _classify_counts(
     and :func:`diff_counts_pruned` so the localized bench pair sits on
     byte-identical counting machinery."""
     j = fs.join(ds, _KEY, "full_outer")
-    is_ins = F.col("_d_fp").isNull()
-    is_del = F.col("_f_fp").isNull()
-    is_upd = (~is_ins) & (~is_del) & (F.col("_f_fp") != F.col("_d_fp"))
+    is_ins, is_upd, is_del = _classify()
     n_del = (
         F.sum(F.when(is_del, 1).otherwise(0)).cast("bigint")
         if delete_not_in_file
@@ -287,11 +282,7 @@ def diff_changes(
         F.struct(*[F.col(c) for c in payload]).alias(BEFORE_COL),
     )
     j = fs.join(ds, _KEY, "full_outer")
-    # a present side's fingerprint is never NULL (xxhash64 over
-    # strings); NULL fp == that side absent from the full outer
-    is_ins = F.col("_d_fp").isNull()
-    is_del = F.col("_f_fp").isNull()
-    is_upd = (~is_ins) & (~is_del) & (F.col("_f_fp") != F.col("_d_fp"))
+    is_ins, is_upd, is_del = _classify()
     kind = (
         F.when(is_ins, F.lit("insert"))
         .when(is_upd, F.lit("update"))

@@ -147,7 +147,11 @@ def scd2_apply_onepass(
     sides are scanned and shuffled once instead of five times.
     """
     from mydatasyncer_spark.functions.canonical import row_fingerprint
-    from mydatasyncer_spark.operators.diff import _KEY, with_canonical_key
+    from mydatasyncer_spark.operators.diff import (
+        _KEY,
+        _classify,
+        with_canonical_key,
+    )
 
     if columns is None:
         columns = [c for c in snapshot.columns]
@@ -167,11 +171,7 @@ def scd2_apply_onepass(
         F.col(VALID_FROM).alias("_d_vf"),
     )
     j = fs.join(ds, _KEY, "full_outer")
-    # a present side's fingerprint is never NULL (xxhash64 over
-    # strings) — NULL fp means that side is absent from the full outer
-    is_ins = F.col("_d_fp").isNull()
-    is_del = F.col("_f_fp").isNull()
-    is_upd = (~is_ins) & (~is_del) & (F.col("_f_fp") != F.col("_d_fp"))
+    is_ins, is_upd, is_del = _classify()
     ts_lit = F.lit(ts).cast(eff_type)
     null_eff = F.lit(None).cast(eff_type)
     opened = F.struct(

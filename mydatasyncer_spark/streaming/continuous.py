@@ -48,6 +48,26 @@ from mydatasyncer_spark.sinks.applier import (
 )
 
 
+def _start(
+    stream_df: DataFrame,
+    apply_batch,
+    query_name: str,
+    checkpoint_dir: str | None,
+):
+    """Start ``apply_batch`` as the ``foreachBatch`` sink of
+    ``stream_df`` — the one trigger policy of every stream here:
+    ``availableNow`` (drain what is there, then stop), checkpointed
+    when ``checkpoint_dir`` is given."""
+    writer = (
+        stream_df.writeStream.foreachBatch(apply_batch)
+        .queryName(query_name)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
 def sync_batch(
     spark: SparkSession,
     snapshot_df: DataFrame,
@@ -139,14 +159,7 @@ def continuous_merge(
             compute_stats=False,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def _cluster_rejections(near: DataFrame, vs_idx: DataFrame, id_col: str) -> DataFrame:
@@ -461,14 +474,7 @@ def continuous_dedup(
             n_id_buckets=n_id_buckets,
         )
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_docs, apply_batch, query_name, checkpoint_dir)
 
 
 #: metadata key (on ``_ckey``) recording a curation content-key
@@ -784,14 +790,7 @@ def continuous_curation(
         else:
             new_keys.write.mode("append").parquet(content_keys_path)
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_docs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_ann_index(
@@ -904,14 +903,7 @@ def continuous_ann_index(
         parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_vecs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_pq_index(
@@ -1064,14 +1056,7 @@ def continuous_pq_index(
         parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_vecs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_lsh_index(
@@ -1160,14 +1145,7 @@ def continuous_lsh_index(
         parts = id_bucket_layout(idx.columns, ["bucket"])
         idx.write.mode("append").partitionBy(*parts).parquet(index_path)
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_vecs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_semantic_dedup(
@@ -1354,14 +1332,7 @@ def continuous_semantic_dedup(
         finally:
             batch.unpersist()
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_vecs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_containment_probe(
@@ -1442,14 +1413,7 @@ def continuous_containment_probe(
             "append"
         ).parquet(pairs_path)
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_docs, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_sketch_rollup(
@@ -1547,14 +1511,7 @@ def _continuous_partials(
         )
         partial.write.mode("append").parquet(partials_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def rollup_apply_batch(
@@ -1834,14 +1791,7 @@ def continuous_rollup(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 #: partition column of a BUCKETED continuous join view (n_buckets)
@@ -2156,14 +2106,7 @@ def continuous_join_view(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_sync(
@@ -2188,14 +2131,7 @@ def continuous_sync(
         backend = backend_factory()
         sync_batch(batch_df.sparkSession, batch_df, spec, backend)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def scd2_apply_batch(
@@ -2328,14 +2264,7 @@ def continuous_scd2_table(
             effective_type=effective_type,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_scd2(
@@ -2363,14 +2292,7 @@ def continuous_scd2(
             effective_type=effective_type,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, apply_batch, query_name, checkpoint_dir)
 
 
 def continuous_jaccard_index(
@@ -2697,11 +2619,4 @@ def continuous_jaccard_index(
         finally:
             batch.unpersist()
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_docs, apply_batch, query_name, checkpoint_dir)

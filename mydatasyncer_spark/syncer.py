@@ -110,7 +110,9 @@ class Syncer:
     crosses the Python driver), staging and cleanup happen OUTSIDE
     the global transaction (MySQL DDL implicit-commits), and the
     transaction wraps only the set-based applies in the two-phase
-    order."""
+    order. A backend without the per-row methods (anything but a
+    :class:`DbApiBackend`, e.g. ``JdbcBackend``) always takes the
+    staged path."""
 
     def __init__(
         self,
@@ -225,7 +227,7 @@ class Syncer:
             self._release(prepared)
             return outcome
 
-        if self.staging:
+        if self.staging or not isinstance(self.backend, DbApiBackend):
             return self._run_staged(
                 outcome, prepared, insert_order, delete_order
             )

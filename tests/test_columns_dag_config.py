@@ -299,6 +299,36 @@ class TestCli:
         ).fetchall() == [(1, "a"), (2, "B"), (4, "d")]
         conn.close()
 
+    def test_cli_syncs_jdbc_target(self, spark, tmp_path, capsys):
+        """A ``db.url`` target syncs with no write-path flag: the JDBC
+        backend has no per-row methods, so the sync must stage."""
+        import uuid
+
+        from mydatasyncer_spark.__main__ import main
+        from mydatasyncer_spark.sinks.jdbc import JdbcBackend
+
+        url = f"jdbc:derby:memory:cli_{uuid.uuid4().hex[:8]};create=true"
+        backend = JdbcBackend(spark, url, dialect="derby")
+        backend.conn.execute_update(
+            'CREATE TABLE "items" ("id" BIGINT PRIMARY KEY, '
+            '"name" VARCHAR(64))'
+        )
+        backend.conn.execute_update(
+            "INSERT INTO \"items\" VALUES (1, 'a'), (2, 'b'), (3, 'c')"
+        )
+        backend.conn.commit()
+        cfg = self._write(tmp_path, str(tmp_path / "unused.db"))
+        with open(cfg, "a") as fh:
+            fh.write(f"db:\n  url: '{url}'\n")
+        try:
+            rc = main(["-config", cfg], spark=spark)
+            assert rc == 0, capsys.readouterr().err
+            assert sorted(
+                backend.conn.query('SELECT "id", "name" FROM "items"')
+            ) == [(1, "a"), (2, "B"), (4, "d")]
+        finally:
+            backend.close()
+
     def test_cli_fails_loudly(self, spark, tmp_path, capsys):
         from mydatasyncer_spark.__main__ import main
 

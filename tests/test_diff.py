@@ -8,7 +8,6 @@ import pytest
 
 from mydatasyncer_spark.operators.diff import (
     BEFORE_COL,
-    changed_columns,
     detect_deletes,
     detect_inserts,
     detect_updates,
@@ -61,17 +60,6 @@ def test_null_vs_empty_update(spark):
     file_df = spark.createDataFrame([(1, "")], "id long, v string")
     db_df = spark.createDataFrame([(1, None)], "id long, v string")
     assert detect_updates(file_df, db_df, "id", ["id", "v"]).count() == 0
-
-
-def test_changed_columns(spark, snapshots):
-    file_df, db_df = snapshots
-    f = file_df.alias("f")
-    d = db_df.alias("d")
-    joined = f.join(d, f["id"] == d["id"]).filter(f["id"] == 1)
-    got = joined.select(
-        changed_columns(f, d, ["name", "score"]).alias("chg")
-    ).first()["chg"]
-    assert got == ["score"]
 
 
 def test_empty_file_diff(spark, snapshots):

@@ -1,10 +1,13 @@
-"""One-pass classification equivalence (r14 optimization): the
-single-full-outer derivations — diff_changes, maintain_rollup_onepass,
-maintain_rollup_minmax_onepass, affected_join_keys_onepass,
-scd2_apply_onepass — must be row-identical to the legacy leg-wise
-compositions for any mutation mix, including NULL group values, NULL
-measure values, NULL join keys, group moves, group death/birth, and
-both SCD2 absent-key policies."""
+"""One-pass classification equivalence: the single-full-outer
+derivations — diff_changes, the IVM views over its classified frame
+(maintain_rollup, maintain_rollup_minmax, affected_join_keys) and
+scd2_apply_onepass — must match an independent reference for any
+mutation mix, including NULL group values, NULL measure values, NULL
+join keys, group moves, group death/birth, and both SCD2 absent-key
+policies. The rollups compare against a full recompute over the new
+snapshot, the affected keys against a key set built on the driver
+from the collected snapshots, SCD2 against the leg-wise
+scd2_apply."""
 
 from __future__ import annotations
 
@@ -20,11 +23,8 @@ from mydatasyncer_spark.operators.diff import (
 )
 from mydatasyncer_spark.operators.ivm import (
     affected_join_keys,
-    affected_join_keys_onepass,
     maintain_rollup,
     maintain_rollup_minmax,
-    maintain_rollup_minmax_onepass,
-    maintain_rollup_onepass,
     rollup_state,
     rollup_state_minmax,
 )
@@ -107,34 +107,49 @@ class TestDiffChanges:
         return _frames(spark, seed)
 
 
+def _narrow(new_df, old_df, payload):
+    """The registry queries' form: one classification join carrying
+    only the columns the view reads."""
+    return DiffResult.of_changes(
+        diff_changes(new_df, old_df, "id", new_df.columns, payload=payload)
+    )
+
+
+def _full_outer_joins(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "FullOuter"
+    )
+
+
 class TestRollupOnePassEquivalence:
     @pytest.mark.parametrize("seed", [3, 11, 42])
     def test_sum_rollup_matches_legacy_and_recompute(self, spark, seed):
         old_df, new_df = _frames(spark, seed)
         state = rollup_state(old_df, ["g"], "v")
-        diff = diff_snapshots(new_df, old_df, "id")
-        legacy = maintain_rollup(state, diff, ["g"], "v")
-        onepass = maintain_rollup_onepass(
-            state, new_df, old_df, "id", new_df.columns, ["g"], "v"
-        )
-        assert _rows(onepass) == _rows(legacy)
-        assert _rows(onepass) == _rows(rollup_state(new_df, ["g"], "v"))
+        recompute = _rows(rollup_state(new_df, ["g"], "v"))
+        for diff in (
+            diff_snapshots(new_df, old_df, "id"),
+            _narrow(new_df, old_df, ["g", "v"]),
+        ):
+            assert _rows(maintain_rollup(state, diff, ["g"], "v")) == recompute
 
     @pytest.mark.parametrize("seed", [5, 23, 99])
     def test_minmax_rollup_matches_legacy_and_recompute(self, spark, seed):
         old_df, new_df = _frames(spark, seed)
         state = rollup_state_minmax(old_df, ["g"], "v")
-        diff = diff_snapshots(new_df, old_df, "id")
-        legacy = maintain_rollup_minmax(state, diff, new_df, ["g"], "v")
-        onepass = maintain_rollup_minmax_onepass(
-            state, new_df, old_df, new_df, "id", new_df.columns, ["g"], "v"
-        )
-        assert _rows(onepass) == _rows(legacy)
-        assert _rows(onepass) == _rows(rollup_state_minmax(new_df, ["g"], "v"))
+        recompute = _rows(rollup_state_minmax(new_df, ["g"], "v"))
+        for diff in (
+            diff_snapshots(new_df, old_df, "id"),
+            _narrow(new_df, old_df, ["g", "v"]),
+        ):
+            maintained = maintain_rollup_minmax(
+                state, diff, new_df, ["g"], "v"
+            )
+            assert _rows(maintained) == recompute
 
     def test_minmax_extremum_removal_repairs(self, spark):
         """A delete of the stored minimum must route through the
-        damaged-group repair in BOTH implementations identically."""
+        damaged-group repair."""
         old_df = spark.createDataFrame(
             [(1, "x", 1.0), (2, "x", 5.0), (3, "x", 9.0)], SCHEMA
         )
@@ -142,36 +157,69 @@ class TestRollupOnePassEquivalence:
             [(2, "x", 5.0), (3, "x", 9.0)], SCHEMA
         )
         state = rollup_state_minmax(old_df, ["g"], "v")
-        onepass = maintain_rollup_minmax_onepass(
-            state, new_df, old_df, new_df, "id", new_df.columns, ["g"], "v"
+        onepass = maintain_rollup_minmax(
+            state, _narrow(new_df, old_df, ["g", "v"]), new_df, ["g"], "v"
         )
         [r] = onepass.collect()
         assert (r["min_val"], r["max_val"], r["n_rows"]) == (5.0, 9.0, 2)
+
+    def test_one_classification_join_per_use(self, spark):
+        """Over an unpinned diff_snapshots the rollup runs the diff's
+        one classification join plus its state merge — not one
+        classification join per diff leg."""
+        old_df, new_df = _frames(spark, 3)
+        diff = diff_snapshots(new_df, old_df, "id")
+        state = rollup_state(old_df, ["g"], "v")
+        assert _full_outer_joins(maintain_rollup(state, diff, ["g"], "v")) == 2
+
+
+def _driver_affected_keys(old_df, new_df, key):
+    """Affected keys from the collected snapshots: an insert's
+    after-key, a delete's before-key, both keys of an update — NULL
+    included."""
+    old = {r["id"]: r for r in old_df.collect()}
+    new = {r["id"]: r for r in new_df.collect()}
+    keys = set()
+    for i in old.keys() | new.keys():
+        o, n = old.get(i), new.get(i)
+        if o is None:
+            keys.add(n[key])
+        elif n is None:
+            keys.add(o[key])
+        elif o != n:
+            keys.update((o[key], n[key]))
+    return sorted(keys, key=lambda x: (x is None, x))
+
+
+def _key_list(df, key):
+    return sorted((r[key] for r in df.collect()), key=lambda x: (x is None, x))
 
 
 class TestAffectedKeysOnePassEquivalence:
     @pytest.mark.parametrize("seed", [3, 42])
     def test_key_set_matches_legacy(self, spark, seed):
         old_df, new_df = _frames(spark, seed)
-        diff = diff_snapshots(new_df, old_df, "id")
-        legacy = affected_join_keys(diff, "g")
-        onepass = affected_join_keys_onepass(
-            new_df, old_df, "id", new_df.columns, "g"
-        )
-        assert _rows(onepass) == _rows(legacy)
+        expected = _driver_affected_keys(old_df, new_df, "g")
+        for diff in (
+            diff_snapshots(new_df, old_df, "id"),
+            _narrow(new_df, old_df, ["g"]),
+        ):
+            assert _key_list(affected_join_keys(diff, "g"), "g") == expected
 
     def test_null_key_move_contributes_both_sides(self, spark):
         """An update moving a row from the NULL group to 'x' must
-        dirty BOTH keys — including NULL — exactly as the legacy
-        union of after+before legs."""
+        dirty BOTH keys — including NULL."""
         old_df = spark.createDataFrame([(1, None, 5.0)], SCHEMA)
         new_df = spark.createDataFrame([(1, "x", 5.0)], SCHEMA)
-        keys = affected_join_keys_onepass(
-            new_df, old_df, "id", new_df.columns, "g"
-        )
-        assert sorted(
-            [r["g"] for r in keys.collect()], key=lambda x: (x is None, x)
-        ) == ["x", None]
+        keys = affected_join_keys(_narrow(new_df, old_df, ["g"]), "g")
+        assert _key_list(keys, "g") == ["x", None]
+
+    def test_one_classification_join_per_use(self, spark):
+        """Over an unpinned diff_snapshots the key scope runs the
+        diff's one classification join, not one per diff leg."""
+        old_df, new_df = _frames(spark, 3)
+        diff = diff_snapshots(new_df, old_df, "id")
+        assert _full_outer_joins(affected_join_keys(diff, "g")) == 1
 
 
 class TestScd2OnePassEquivalence:
