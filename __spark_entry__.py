@@ -10,6 +10,7 @@ math surfaced as doubles, BIGINT counts) live in
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -2191,15 +2192,37 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash LSH pairs over the documents table feed THREE contract
 # queries (dedup_minhash_lsh, dedup_cluster_assign, dedup_survivors).
 # minhash_lsh_pairs(eager=True) localCheckpoints its result, so one
-# memoized build per (session, sf_dir) makes the band join run once
-# per bench/gate run instead of three times — the same reuse a
-# composed pipeline gets from curation.py's checkpoint. Single-entry
-# cache: a new session or sf_dir evicts the old checkpoint reference.
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+# memoized build per (session, sf_dir, documents file version) makes
+# the band join run once per bench/gate run instead of three times —
+# the same reuse a composed pipeline gets from curation.py's
+# checkpoint. Single-entry cache: a new session, sf_dir or rewrite of
+# documents.parquet evicts the old checkpoint reference.
+_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _file_version(path: str) -> tuple[int, int]:
+    """(largest mtime_ns, total size) over the files of ``path`` (a
+    file or a dataset directory): changes when the data is rewritten."""
+    if os.path.isfile(path):
+        stats = [os.stat(path)]
+    else:
+        stats = [
+            os.stat(os.path.join(root, name))
+            for root, _, names in os.walk(path)
+            for name in names
+        ]
+    return (
+        max((st.st_mtime_ns for st in stats), default=0),
+        sum(st.st_size for st in stats),
+    )
 
 
 def _documents_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        _file_version(f"{sf_dir}/documents.parquet"),
+    )
     cached = _LSH_PAIRS_CACHE.get(key)
     if cached is None:
         cached = D.minhash_lsh_pairs(table(spark, sf_dir, "documents"))

@@ -15,7 +15,15 @@ Plus: bool → "true"/"false", NULL → "" (ref: dbsync.go:646-656).
 We keep *typed* schemas end-to-end (an improvement over the
 reference) and use these expressions only where cross-representation
 equality is required: the diff join key and the row-inequality
-comparison. All pure Column expressions — no UDFs.
+comparison. No UDFs.
+
+:func:`canonical_sql` is the one home of the type rules: it renders
+them as Spark SQL text, and every Column here (:func:`canonical_str`,
+:func:`canonical_col`, :func:`row_fingerprint`) is one ``F.expr`` over
+that text. Building a plan from text costs one parse per expression,
+where composing the same rule Column by Column costs a driver round
+trip per function call — the difference is most of the diff's plan
+build time at sync sizes.
 """
 
 from __future__ import annotations
@@ -30,20 +38,47 @@ NULL_TOKENS = ["", "null", "nil", "n/a", "na", "none", "undefined"]
 
 RFC3339_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
+_FIELD_SEP = "\x1f"  # row_fingerprint's field separator
+# a plain decimal string ("69195.0", "-1.50"), and a trailing dot
+_DECIMAL_RE = r"^-?\d+\.\d+$"
+_TRAILING_DOT_RE = r"\.$"
 
-def canonical_str(col: Column, dtype: T.DataType) -> Column:
-    """Canonical string form of a typed column (never NULL; NULL → "")."""
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier (embedded backticks doubled): exact
+    column-name resolution whatever characters the name holds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """Spark SQL string literal (backslash-escaped quote and backslash)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def canonical_sql(name: str, dtype: T.DataType) -> str:
+    """Canonical string form of column ``name`` of type ``dtype``, as
+    Spark SQL text (never NULL; NULL → "")."""
+    c = sql_ident(name)
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        base = _canonical_float(col)
+        # Whole values within long range render via a long cast;
+        # everything else uses Spark's double→string (documented
+        # divergence from Go's ``%v`` for scientific notation —
+        # irrelevant to diff correctness because both sides of every
+        # comparison use this same rule).
+        base = (
+            f"CASE WHEN {c} = floor({c}) AND abs({c}) < 9.2E18"
+            f" THEN CAST(CAST({c} AS BIGINT) AS STRING)"
+            f" ELSE CAST({c} AS STRING) END"
+        )
     elif isinstance(dtype, T.BooleanType):
-        base = F.when(col, F.lit("true")).otherwise(F.lit("false"))
+        base = f"CASE WHEN {c} THEN 'true' ELSE 'false' END"
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        base = F.date_format(col, RFC3339_FORMAT)
+        base = f"date_format({c}, {sql_str(RFC3339_FORMAT)})"
     elif isinstance(dtype, T.DateType):
-        base = F.date_format(col, "yyyy-MM-dd")
+        base = f"date_format({c}, 'yyyy-MM-dd')"
     elif isinstance(dtype, T.DecimalType):
         # trim trailing fractional zeros so DECIMAL(10,2) 42.00 == "42"
-        base = _trim_decimal_zeros(col.cast("string"))
+        base = _trim_decimal_zeros(f"CAST({c} AS STRING)")
     elif isinstance(dtype, T.StringType):
         # strings that *look* like plain decimals get the same
         # whole-float collapse ("69195.0" == double 69195.0); the
@@ -51,38 +86,31 @@ def canonical_str(col: Column, dtype: T.DataType) -> Column:
         # anything non-numeric untouched. The reference never needed
         # this (both its compare sides are raw strings); with typed
         # schemas it is what makes CSV-vs-typed diffs faithful.
-        is_decimal = col.rlike(r"^-?\d+\.\d+$")
-        base = F.when(is_decimal, _trim_decimal_zeros(col)).otherwise(col)
-    else:
-        base = col.cast("string")
-    return F.coalesce(base, F.lit(""))
-
-
-def _canonical_float(col: Column) -> Column:
-    """Whole floats collapse to integer form: 42.0 → "42".
-
-    Whole values within long range render via a long cast; everything
-    else uses Spark's double→string (documented divergence from Go's
-    ``%v`` for scientific notation — irrelevant to diff correctness
-    because both sides of every comparison use this same function).
-    """
-    is_whole = (col == F.floor(col)) & (F.abs(col) < F.lit(9.2e18))
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(is_whole, col.cast("long").cast("string")).otherwise(
-            col.cast("string")
+        base = (
+            f"CASE WHEN {c} RLIKE {sql_str(_DECIMAL_RE)}"
+            f" THEN {_trim_decimal_zeros(c)} ELSE {c} END"
         )
+    else:
+        base = f"CAST({c} AS STRING)"
+    return f"coalesce({base}, '')"
+
+
+def _trim_decimal_zeros(s: str) -> str:
+    trimmed = (
+        f"regexp_replace(regexp_replace({s}, '0+$', ''),"
+        f" {sql_str(_TRAILING_DOT_RE)}, '')"
     )
+    return f"CASE WHEN contains({s}, '.') THEN {trimmed} ELSE {s} END"
 
 
-def _trim_decimal_zeros(s: Column) -> Column:
-    has_frac = s.contains(".")
-    trimmed = F.regexp_replace(F.regexp_replace(s, r"0+$", ""), r"\.$", "")
-    return F.when(has_frac, trimmed).otherwise(s)
+def canonical_str(name: str, dtype: T.DataType) -> Column:
+    """:func:`canonical_sql` as a Column."""
+    return F.expr(canonical_sql(name, dtype))
 
 
 def canonical_col(df: DataFrame, name: str) -> Column:
     """``canonical_str`` resolved against ``df``'s schema."""
-    return canonical_str(df[name], df.schema[name].dataType)
+    return canonical_str(name, df.schema[name].dataType)
 
 
 def row_fingerprint(df: DataFrame, cols: list[str]) -> Column:
@@ -93,11 +121,12 @@ def row_fingerprint(df: DataFrame, cols: list[str]) -> Column:
     compares column-by-column in string space). A field separator
     keeps ("ab","c") distinct from ("a","bc").
     """
-    parts = []
-    for name in cols:
-        parts.append(canonical_col(df, name))
-        parts.append(F.lit("\x1f"))
-    return F.xxhash64(*parts)
+    schema = df.schema
+    sep = sql_str(_FIELD_SEP)
+    parts = ", ".join(
+        f"{canonical_sql(name, schema[name].dataType)}, {sep}" for name in cols
+    )
+    return F.expr(f"xxhash64({parts})")
 
 
 def is_nullish(col: Column) -> Column:

@@ -37,7 +37,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mydatasyncer_spark.functions.canonical import canonical_col, row_fingerprint
+from mydatasyncer_spark.functions.canonical import (
+    canonical_col,
+    canonical_sql,
+    row_fingerprint,
+    sql_ident,
+)
 from mydatasyncer_spark.operators.partitioning import ensure_min_parallelism
 
 _KEY = "_pk_canon"
@@ -77,7 +82,7 @@ class DiffResult:
         is an empty relation (no job when pulled)."""
 
         def kind(k: str) -> DataFrame:
-            return changes.filter(F.col(KIND_COL) == k)
+            return changes.filter(f"{KIND_COL} = '{k}'")
 
         to_delete = kind("delete").select(f"{BEFORE_COL}.*")
         return cls(
@@ -124,6 +129,23 @@ def with_canonical_key(df: DataFrame, primary_key: str) -> DataFrame:
     return df.withColumn(_KEY, canonical_col(df, primary_key))
 
 
+def _struct_of(columns: list[str]) -> Column:
+    """``struct(columns...)`` — field names and types as the columns'."""
+    return F.expr(f"struct({', '.join(sql_ident(c) for c in columns)})")
+
+
+def _fingerprinted(
+    df: DataFrame, primary_key: str, columns: list[str], fp: str, *extra: Column
+) -> DataFrame:
+    """``df`` as ``(canonical key, row fingerprint of columns, *extra)``
+    in ONE projection — the per-side input of every one-pass diff."""
+    return df.select(
+        canonical_col(df, primary_key).alias(_KEY),
+        row_fingerprint(df, columns).alias(fp),
+        *extra,
+    )
+
+
 def detect_inserts(
     file_df: DataFrame, db_df: DataFrame, primary_key: str
 ) -> DataFrame:
@@ -153,13 +175,11 @@ def detect_updates(
     Output: after-values in ``columns`` + ``_before`` struct of the
     DB-side values.
     """
-    f = with_canonical_key(file_df.select(*columns), primary_key)
-    d = with_canonical_key(db_df.select(*columns), primary_key)
+    f = _fingerprinted(file_df, primary_key, columns, "_f_fp", *columns)
+    d = _fingerprinted(db_df, primary_key, columns, "_d_fp", *columns)
     joined = f.alias("f").join(d.alias("d"), _KEY, "inner")
-    fa, da = joined.select("f.*").drop(_KEY), joined.select("d.*").drop(_KEY)
-    differs = row_fingerprint(fa, columns) != row_fingerprint(da, columns)
     return (
-        joined.filter(differs)
+        joined.filter(F.col("_f_fp") != F.col("_d_fp"))
         .select(
             *[F.col(f"f.{c}").alias(c) for c in columns],
             F.struct(*[F.col(f"d.{c}").alias(c) for c in columns]).alias(
@@ -188,23 +208,23 @@ def diff_counts(
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
-    f = with_canonical_key(file_df.select(*columns), primary_key)
-    d = with_canonical_key(db_df.select(*columns), primary_key)
-    fs = f.select(F.col(_KEY), row_fingerprint(f, columns).alias("_f_fp"))
-    ds = d.select(F.col(_KEY), row_fingerprint(d, columns).alias("_d_fp"))
+    fs = _fingerprinted(file_df, primary_key, columns, "_f_fp")
+    ds = _fingerprinted(db_df, primary_key, columns, "_d_fp")
     return _classify_counts(fs, ds, delete_not_in_file)
 
 
+# The one classification rule of every one-pass diff, as SQL text over
+# the full outer join of per-side fingerprints ``_f_fp`` (file) and
+# ``_d_fp`` (db). A present side's fingerprint is never NULL (xxhash64
+# over strings), so a NULL fingerprint means that side is absent.
+_IS_INSERT = "_d_fp IS NULL"
+_IS_DELETE = "_f_fp IS NULL"
+_IS_UPDATE = f"NOT ({_IS_INSERT}) AND NOT ({_IS_DELETE}) AND _f_fp != _d_fp"
+
+
 def _classify() -> tuple[Column, Column, Column]:
-    """``(is_insert, is_update, is_delete)`` over the full outer join
-    of per-side fingerprints ``_f_fp`` (file) and ``_d_fp`` (db) — the
-    one classification rule of every one-pass diff. A present side's
-    fingerprint is never NULL (xxhash64 over strings), so a NULL
-    fingerprint means that side is absent."""
-    is_ins = F.col("_d_fp").isNull()
-    is_del = F.col("_f_fp").isNull()
-    is_upd = (~is_ins) & (~is_del) & (F.col("_f_fp") != F.col("_d_fp"))
-    return is_ins, is_upd, is_del
+    """``(is_insert, is_update, is_delete)`` as Columns."""
+    return F.expr(_IS_INSERT), F.expr(_IS_UPDATE), F.expr(_IS_DELETE)
 
 
 def _classify_counts(
@@ -269,28 +289,23 @@ def diff_changes(
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
     if payload is None:
         payload = columns
-    f = with_canonical_key(file_df.select(*columns), primary_key)
-    d = with_canonical_key(db_df.select(*columns), primary_key)
-    fs = f.select(
-        F.col(_KEY),
-        row_fingerprint(f, columns).alias("_f_fp"),
-        F.struct(*[F.col(c) for c in payload]).alias(AFTER_COL),
+    fs = _fingerprinted(
+        file_df, primary_key, columns, "_f_fp",
+        _struct_of(payload).alias(AFTER_COL),
     )
-    ds = d.select(
-        F.col(_KEY),
-        row_fingerprint(d, columns).alias("_d_fp"),
-        F.struct(*[F.col(c) for c in payload]).alias(BEFORE_COL),
+    ds = _fingerprinted(
+        db_df, primary_key, columns, "_d_fp",
+        _struct_of(payload).alias(BEFORE_COL),
     )
     j = fs.join(ds, _KEY, "full_outer")
-    is_ins, is_upd, is_del = _classify()
-    kind = (
-        F.when(is_ins, F.lit("insert"))
-        .when(is_upd, F.lit("update"))
-        .when(is_del & F.lit(delete_not_in_file), F.lit("delete"))
+    deletes = "true" if delete_not_in_file else "false"
+    kind = F.expr(
+        f"CASE WHEN {_IS_INSERT} THEN 'insert'"
+        f" WHEN {_IS_UPDATE} THEN 'update'"
+        f" WHEN {_IS_DELETE} AND {deletes} THEN 'delete' END"
     )
-    return (
-        j.select(kind.alias(KIND_COL), AFTER_COL, BEFORE_COL)
-        .filter(F.col(KIND_COL).isNotNull())
+    return j.select(kind.alias(KIND_COL), AFTER_COL, BEFORE_COL).filter(
+        f"{KIND_COL} IS NOT NULL"
     )
 
 
@@ -383,8 +398,10 @@ def diff_counts_pruned(
 
     def pinned(df: DataFrame, fp: str) -> DataFrame:
         p = df.select(*columns)
-        keyed = with_canonical_key(
-            p.select(bucket_fn(p).alias("_bucket"), *columns), primary_key
+        keyed = p.select(
+            bucket_fn(p).alias("_bucket"),
+            *columns,
+            canonical_col(p, primary_key).alias(_KEY),
         )
         # widen (keyed on the join key) BEFORE the narrow projection,
         # so the per-row fingerprint runs across the cluster instead
@@ -420,7 +437,8 @@ def bucket_col(df: DataFrame, primary_key: str, n_buckets: int) -> Column:
     """Stable key-hash bucket id in ``[0, n_buckets)`` — the unit of
     diff pruning. Canonical-key based, so both snapshot sides bucket
     identically regardless of physical type (J5)."""
-    return F.pmod(F.xxhash64(canonical_col(df, primary_key)), F.lit(n_buckets))
+    canon = canonical_sql(primary_key, df.schema[primary_key].dataType)
+    return F.expr(f"pmod(xxhash64({canon}), {int(n_buckets)})")
 
 
 def changed_buckets(
@@ -457,8 +475,10 @@ def changed_buckets(
         bucket_fn = lambda d: bucket_col(d, primary_key, n_buckets)  # noqa: E731
 
     def fingerprinted(df: DataFrame) -> DataFrame:
-        p = df.select(bucket_fn(df).alias("_bucket"), *columns)
-        return p.select("_bucket", row_fingerprint(p, columns).alias("_fp"))
+        return df.select(
+            bucket_fn(df).alias("_bucket"),
+            row_fingerprint(df, columns).alias("_fp"),
+        )
 
     return _changed_bucket_ids(
         fingerprinted(file_df), "_fp", fingerprinted(db_df), "_fp"

@@ -146,28 +146,24 @@ def scd2_apply_onepass(
     for histories that can violate the invariant. At 100 TB both
     sides are scanned and shuffled once instead of five times.
     """
-    from mydatasyncer_spark.functions.canonical import row_fingerprint
     from mydatasyncer_spark.operators.diff import (
         _KEY,
         _classify,
-        with_canonical_key,
+        _fingerprinted,
+        _struct_of,
     )
 
     if columns is None:
         columns = [c for c in snapshot.columns]
     eff_type = _effective_type(history)
     cur = history.filter(F.col(IS_CURRENT)).select(*columns, VALID_FROM)
-    f = with_canonical_key(snapshot.select(*columns), primary_key)
-    d = with_canonical_key(cur, primary_key)
-    fs = f.select(
-        F.col(_KEY),
-        row_fingerprint(f, columns).alias("_f_fp"),
-        F.struct(*[F.col(c) for c in columns]).alias("_f_p"),
+    fs = _fingerprinted(
+        snapshot, primary_key, columns, "_f_fp",
+        _struct_of(columns).alias("_f_p"),
     )
-    ds = d.select(
-        F.col(_KEY),
-        row_fingerprint(d, columns).alias("_d_fp"),
-        F.struct(*[F.col(c) for c in columns]).alias("_d_p"),
+    ds = _fingerprinted(
+        cur, primary_key, columns, "_d_fp",
+        _struct_of(columns).alias("_d_p"),
         F.col(VALID_FROM).alias("_d_vf"),
     )
     j = fs.join(ds, _KEY, "full_outer")

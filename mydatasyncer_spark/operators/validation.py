@@ -19,7 +19,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mydatasyncer_spark.errors import ValidationError
-from mydatasyncer_spark.functions.canonical import canonical_col, is_nullish
+from mydatasyncer_spark.functions.canonical import (
+    canonical_col,
+    is_nullish,
+    sql_ident,
+    sql_str,
+)
+from mydatasyncer_spark.sources.readers import (
+    rfc3339_columns,
+    rfc3339_probe,
+    rfc3339_targets,
+)
 
 MAX_KEY_LENGTH = 255  # ref: primary_key_validator.go:37-53
 SAMPLE_LIMIT = 10  # ref: primary_key_validator.go:248-263
@@ -93,6 +103,10 @@ class ValidationReport:
     by_reason: dict[str, int] = field(default_factory=dict)
     duplicate_keys: list[tuple[str, int]] = field(default_factory=list)
     samples: list[dict] = field(default_factory=list)
+    #: string columns whose every non-NULL value is RFC3339 (some
+    #: non-NULL) — what ``coerce_rfc3339`` would convert; None unless
+    #: the validation was asked to probe
+    rfc3339_columns: list[str] | None = None
 
     @property
     def valid(self) -> int:
@@ -117,6 +131,7 @@ def validate_primary_keys(
     primary_key: str,
     strict: bool = True,
     max_length: int = MAX_KEY_LENGTH,
+    probe_rfc3339: bool = False,
 ) -> ValidationReport:
     """Run the validator; in strict mode raise on any invalid record
     (ref: ValidateAllRecords, primary_key_validator.go:57-136).
@@ -133,31 +148,53 @@ def validate_primary_keys(
     the report is deterministic; nullish keys are never listed as
     duplicate keys (the reference's first-seen map holds only
     non-null keys, ref: primary_key_validator.go:96-106).
+
+    With ``probe_rfc3339`` the same aggregate also answers
+    ``coerce_rfc3339``'s probe for every string column of ``df`` (its
+    first level folds each column's partial probe per key, the global
+    level merges them) into :attr:`ValidationReport.rfc3339_columns`,
+    so a caller that coerces after validating scans once, not twice.
+    The report describes ``df`` as given: a caller whose PK column
+    coerces must validate the coerced frame, where two spellings of
+    one instant are one key.
     """
     has_key = primary_key in df.columns
+    targets = rfc3339_targets(df) if probe_rfc3339 else []
     if not has_key:
-        total = df.count()
+        row = df.agg(
+            F.count(F.lit(1)).alias("total"), *rfc3339_probe(targets)
+        ).first()
+        total = row["total"]
         by_reason = {R_MISSING: total} if total else {}
     else:
         per_key = df.groupBy(
             F.col(primary_key).cast("string").alias("key")
-        ).agg(F.count(F.lit(1)).alias("n"))
-        per_key = per_key.withColumn("_nullish", is_nullish(F.col("key")))
-        issue = format_issue(F.col("key"), max_length)
+        ).agg(F.count(F.lit(1)).alias("n"), *rfc3339_probe(targets))
+        per_key = per_key.withColumns(
+            {
+                "_nullish": is_nullish(F.col("key")),
+                "_issue": format_issue(F.col("key"), max_length),
+            }
+        )
         clean = ~F.col("_nullish")
 
-        def total_of(value: Column, name: str) -> Column:
-            return F.coalesce(F.sum(value), F.lit(0)).cast("bigint").alias(name)
+        def total_of(value: str, name: str) -> Column:
+            return F.expr(
+                f"CAST(coalesce(sum({value}), 0) AS BIGINT)"
+            ).alias(name)
 
         fmt_reasons = [R_LINEBREAK, R_TAB, R_TOO_LONG, R_UNTRIMMED]
         row = per_key.agg(
-            total_of(F.col("n"), "total"),
-            total_of(F.when(F.col("_nullish"), F.col("n")), R_NULLISH),
-            total_of(F.when(clean, F.col("n") - 1), R_DUPLICATE),
+            total_of("n", "total"),
+            total_of("CASE WHEN _nullish THEN n END", R_NULLISH),
+            total_of("CASE WHEN NOT _nullish THEN n - 1 END", R_DUPLICATE),
             *[
-                total_of(F.when(clean & (issue == r), F.lit(1)), r)
+                total_of(
+                    f"CASE WHEN NOT _nullish AND _issue = '{r}' THEN 1 END", r
+                )
                 for r in fmt_reasons
             ],
+            *rfc3339_probe(targets, merge=True),
         ).first()
         total = row["total"]
         by_reason = {
@@ -191,6 +228,9 @@ def validate_primary_keys(
         by_reason=by_reason,
         duplicate_keys=[(r["key"], r["n"]) for r in dup_rows],
         samples=[r.asDict() for r in samples],
+        rfc3339_columns=(
+            rfc3339_columns(row, targets) if probe_rfc3339 else None
+        ),
     )
     if strict and invalid:
         raise ValidationError(report.summary(), report)
@@ -217,17 +257,9 @@ def profile_columns(df: DataFrame, columns: list[str]) -> DataFrame:
     the columns you are about to join or partition on, and read skew
     (distinct count vs rows) and null discipline off the result.
     """
-    def lit_str(s: str) -> str:
-        # SQL string literal: double embedded single quotes
-        return "'" + s.replace("'", "''") + "'"
-
-    def ident(s: str) -> str:
-        # backtick-quoted identifier: double embedded backticks
-        return "`" + s.replace("`", "``") + "`"
-
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in columns:
-        col = F.col(ident(c))  # exact-name resolution, any characters
+        col = F.col(sql_ident(c))  # exact-name resolution, any characters
         aggs.extend(
             [
                 F.sum(F.when(col.isNull(), 1).otherwise(0))
@@ -239,8 +271,8 @@ def profile_columns(df: DataFrame, columns: list[str]) -> DataFrame:
         )
     one = df.agg(*aggs)
     stack_args = ", ".join(
-        f"{lit_str(c)}, _rows, {ident('_nulls_' + c)},"
-        f" {ident('_min_' + c)}, {ident('_max_' + c)}"
+        f"{sql_str(c)}, _rows, {sql_ident('_nulls_' + c)},"
+        f" {sql_ident('_min_' + c)}, {sql_ident('_max_' + c)}"
         for c in columns
     )
     base = one.selectExpr(
@@ -250,7 +282,7 @@ def profile_columns(df: DataFrame, columns: list[str]) -> DataFrame:
     nd = None
     for c in columns:
         leg = df.agg(
-            F.countDistinct(F.col(ident(c))).alias("n_distinct")
+            F.countDistinct(F.col(sql_ident(c))).alias("n_distinct")
         ).select(F.lit(c).alias("column_name"), "n_distinct")
         nd = leg if nd is None else nd.unionAll(leg)
     # left join (not inner): keeps the n_distinct column nullable, so
@@ -278,14 +310,8 @@ def column_entropy(df: DataFrame, columns: list[str]) -> DataFrame:
     ``groupBy`` treats it.
     """
 
-    def lit_str(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    def ident(s: str) -> str:
-        return "`" + s.replace("`", "``") + "`"
-
     pairs = ", ".join(
-        f"{lit_str(c)}, CAST({ident(c)} AS STRING)" for c in columns
+        f"{sql_str(c)}, CAST({sql_ident(c)} AS STRING)" for c in columns
     )
     unpivoted = df.selectExpr(
         f"stack({len(columns)}, {pairs}) AS (column_name, value)"

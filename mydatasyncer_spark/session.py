@@ -5,6 +5,20 @@ what you would set on a 1000-executor cluster — AQE handles runtime
 re-planning (coalescing post-shuffle partitions, skew-join splitting),
 and Arrow makes the few pandas-UDF paths batch-transfer instead of
 row-at-a-time pickling.
+
+One default trades diagnostics for driver time:
+``spark.python.sql.dataFrameDebugging.enabled=false`` turns off
+PySpark's DataFrame origin capture. With it on, every Column and
+DataFrame call also walks the Python stack and records the call site
+in the JVM (extra py4j round trips per call), which made up a large
+share of the driver time of building a sync's read and diff plans.
+The cost of turning it off: Python call sites no longer appear in the
+query context of analysis and runtime errors (the SQL fragment and
+the error itself still do). PySpark reads the conf once per process,
+from the session active at the first Column or DataFrame call, so a
+process whose session was built without it (a vanilla session) keeps
+capturing — and computes the same results; nothing in the engine
+depends on the setting.
 """
 
 from __future__ import annotations
@@ -42,6 +56,8 @@ _DEFAULT_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
+    # origin capture off: see the module docstring for the trade
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -23,15 +23,17 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mydatasyncer_spark.errors import SyncError
+from mydatasyncer_spark.functions.canonical import sql_ident, sql_str
 
 # RFC3339 detector equivalent to the reference's time.Parse probe
 # (ref: loader.go:33-39) — applied as a column expression, not per-row.
 _RFC3339_RE = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})?$"
+_RFC3339_SQL = sql_str(_RFC3339_RE)
 
 
 def read_csv(
@@ -134,7 +136,50 @@ def read_file(
     return reader(spark, path, schema=schema, columns=columns, **options)
 
 
-def coerce_rfc3339(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def rfc3339_targets(df: DataFrame, columns: list[str] | None = None) -> list[str]:
+    """The columns the RFC3339 probe looks at: ``columns`` (default
+    all), kept where ``df`` types them as strings."""
+    names = columns or [f.name for f in df.schema.fields]
+    return [n for n in names if isinstance(df.schema[n].dataType, T.StringType)]
+
+
+def rfc3339_probe(targets: list[str], merge: bool = False) -> list[Column]:
+    """The probe as aggregate columns, two per target ``i``:
+    ``_ok_i`` (every value NULL or RFC3339) and ``_any_i`` (some value
+    non-NULL). With ``merge`` the same two names re-aggregate rows of
+    an earlier probe level (min of ``_ok_i``, max of ``_any_i``), so
+    the probe folds into any multi-level aggregate over the frame —
+    PK validation's, on the sync path."""
+    aggs = []
+    for i, name in enumerate(targets):
+        ok, any_ = f"_ok_{i}", f"_any_{i}"
+        if merge:
+            ok_sql, any_sql = ok, any_
+        else:
+            c = sql_ident(name)
+            ok_sql = f"{c} IS NULL OR {c} RLIKE {_RFC3339_SQL}"
+            any_sql = f"{c} IS NOT NULL"
+        aggs += [
+            F.expr(f"min({ok_sql})").alias(ok),
+            F.expr(f"max({any_sql})").alias(any_),
+        ]
+    return aggs
+
+
+def rfc3339_columns(row, targets: list[str]) -> list[str]:
+    """The targets a probe row (:func:`rfc3339_probe`) says convert."""
+    return [
+        name
+        for i, name in enumerate(targets)
+        if row[f"_ok_{i}"] and row[f"_any_{i}"]
+    ]
+
+
+def coerce_rfc3339(
+    df: DataFrame,
+    columns: list[str] | None = None,
+    probed: list[str] | None = None,
+) -> DataFrame:
     """Convert string columns that hold RFC3339 values to timestamps.
 
     The typed counterpart of the reference's per-value probe
@@ -149,33 +194,20 @@ def coerce_rfc3339(df: DataFrame, columns: list[str] | None = None) -> DataFrame
     The probe is ONE aggregate job over ALL target columns at once
     (r14 sweep): the previous per-column probes launched up to two
     full scans per string column — a 50-string-column snapshot cost
-    up to 100 scans before the sync even started.
+    up to 100 scans before the sync even started. A caller that has
+    already folded the probe into another aggregate over ``df``
+    passes its answer as ``probed`` (the columns to convert, see
+    :func:`rfc3339_columns`) and no job runs here.
     """
-    targets = [
-        name
-        for name in (
-            columns
-            or [
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, T.StringType)
-            ]
-        )
-        if isinstance(df.schema[name].dataType, T.StringType)
-    ]
-    if not targets:
+    if probed is None:
+        targets = rfc3339_targets(df, columns)
+        if not targets:
+            return df
+        row = df.select(*rfc3339_probe(targets)).first()
+        probed = rfc3339_columns(row, targets)
+    if not probed:
         return df
-    aggs = []
-    for i, name in enumerate(targets):
-        c = F.col(name)
-        aggs.append(F.min(c.isNull() | c.rlike(_RFC3339_RE)).alias(f"_ok_{i}"))
-        aggs.append(F.max(c.isNotNull()).alias(f"_any_{i}"))
-    probe = df.select(*aggs).first()
-    out = df
-    for i, name in enumerate(targets):
-        if probe[f"_ok_{i}"] and probe[f"_any_{i}"]:
-            out = out.withColumn(name, F.to_timestamp(name))
-    return out
+    return df.withColumns({name: F.to_timestamp(name) for name in probed})
 
 
 def validate_file_paths(paths: list[str]) -> None:

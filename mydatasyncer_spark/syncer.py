@@ -10,7 +10,8 @@ writes:
 1. load file snapshots (lazy DataFrames — *all* tables resolved before
    the transaction opens, ref: dbsync.go:936-951);
 2. strict PK validation for diff-mode tables (V1) — its row total is
-   also the empty-file test and the dry-run's file row count;
+   also the empty-file test and the dry-run's file row count, and the
+   same aggregate answers the RFC3339 probe that types the snapshot;
 3. resolve sync columns per table (P4/P5);
 4. compute each diff as ONE classified full-outer join (J2-J4) and
    pin it once (``DiffResult.pin``); the insert/update/delete legs
@@ -139,16 +140,27 @@ class Syncer:
     def _prepare(self, spec: TableSpec) -> _Prepared:
         """Steps 1-4 for one table — everything distributed, nothing
         inside the write transaction."""
-        file_df = coerce_rfc3339(read_file(self.spark, spec.file_path))
+        raw = read_file(self.spark, spec.file_path)
         file_count = None
         if spec.sync_mode == SYNC_MODE_DIFF:
+            # one aggregate validates the keys AND answers the RFC3339
+            # probe, so coercion runs no job of its own
+            report = validate_primary_keys(
+                raw, spec.primary_key, strict=False, probe_rfc3339=True
+            )
+            file_df = coerce_rfc3339(raw, probed=report.rfc3339_columns)
+            if report.invalid or spec.primary_key in report.rfc3339_columns:
+                # the verdict (and the failure report) is the coerced
+                # frame's: two spellings of one instant are one key
+                report = validate_primary_keys(
+                    file_df, spec.primary_key, strict=True
+                )
             # an empty file validates clean; its total doubles as the
             # emptiness test, so no separate probe job runs
-            file_count = validate_primary_keys(
-                file_df, spec.primary_key, strict=True
-            ).total
+            file_count = report.total
             file_empty = file_count == 0
         else:
+            file_df = coerce_rfc3339(raw)
             file_empty = file_df.isEmpty()
         db_cols = self.backend.table_columns(spec.name)
         cols = determine_sync_columns(

@@ -18,7 +18,7 @@ from mydatasyncer_spark.functions.canonical import (
 
 def _canon_one(spark, value, dtype):
     df = spark.createDataFrame([(value,)], T.StructType([T.StructField("v", dtype)]))
-    return df.select(canonical_str(F.col("v"), dtype).alias("c")).first()["c"]
+    return df.select(canonical_str("v", dtype).alias("c")).first()["c"]
 
 
 def test_whole_float_collapse(spark):

@@ -34,7 +34,7 @@ def canon_batch(spark, values, dtype):
         [(v,) for v in values], T.StructType([T.StructField("v", dtype)])
     )
     return [
-        r["c"] for r in df.select(canonical_str(F.col("v"), dtype).alias("c")).collect()
+        r["c"] for r in df.select(canonical_str("v", dtype).alias("c")).collect()
     ]
 
 

@@ -832,6 +832,40 @@ def test_approx_sketches_within_error_bounds(spark, sf_dir):
         assert row["exact_customers"] == exact[seg]["n_customers"], seg
 
 
+def test_lsh_pairs_memo_sees_documents_rewrite(spark, sf_dir, tmp_path):
+    """The registry memoizes the documents' MinHash LSH pairs per
+    session and data directory; rewriting documents.parquet inside the
+    session must give the rewritten corpus's pairs, not the memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+    pq.write_table(docs, path)
+    query = entry_mod.queries()["dedup_minhash_lsh"]
+
+    def pairs():
+        return sorted(
+            tuple(r) for r in query(spark, str(tmp_path)).collect()
+        )
+
+    before = pairs()
+    # three exact copies under fresh ids: three new Jaccard-1 pairs
+    copies = docs.slice(0, 3)
+    new_ids = pa.array(
+        [max(docs.column("doc_id").to_pylist()) + 1 + i for i in range(3)],
+        pa.int64(),
+    )
+    copies = copies.set_column(0, "doc_id", new_ids)
+    pq.write_table(pa.concat_tables([docs, copies]), path)
+    after = pairs()
+    assert len(after) >= len(before) + 3
+    entry_mod._LSH_PAIRS_CACHE.clear()
+    assert pairs() == after
+
+
 class TestAsofVsPandas:
     """Property check against an independent oracle: pandas
     merge_asof implements the same backward/forward semantics

@@ -111,3 +111,90 @@ def test_no_string_columns_runs_no_job(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert out.columns == ["id", "x"]
+
+
+def _csv_table(tmp_path, n_strings: int):
+    """A diff-mode CSV snapshot (PK, one RFC3339 column, and
+    ``n_strings`` plain string columns) and its sqlite target."""
+    import sqlite3
+
+    from mydatasyncer_spark.config import SyncConfig, TableSpec
+
+    names = ["id", "ts"] + [f"s{i}" for i in range(n_strings)]
+    path = tmp_path / f"snap{n_strings}.csv"
+    lines = [",".join(names)]
+    for k in range(20):
+        vals = [str(k), f"2024-01-{k % 28 + 1:02d}T00:00:00Z"]
+        vals += [f"v{k}_{i}" for i in range(n_strings)]
+        lines.append(",".join(vals))
+    path.write_text("\n".join(lines) + "\n")
+    conn = sqlite3.connect(":memory:")
+    conn.execute(
+        "CREATE TABLE snap (id INTEGER PRIMARY KEY, "
+        + ", ".join(f"{n} TEXT" for n in names[1:])
+        + ")"
+    )
+    conn.executemany(
+        f"INSERT INTO snap VALUES ({', '.join('?' * len(names))})",
+        [(k, "2024-01-01T00:00:00Z", *["old"] * n_strings) for k in range(15)],
+    )
+    spec = TableSpec(
+        name="snap", file_path=str(path), primary_key="id", sync_mode="diff"
+    )
+    return conn, SyncConfig(tables=[spec]), spec
+
+
+def _unfused_prepare(syncer, spec):
+    """``Syncer._prepare``'s pinned diff, with the RFC3339 probe as its
+    own job chain ahead of validation, as the sync read path used to
+    run it."""
+    from mydatasyncer_spark.operators.columns import determine_sync_columns
+    from mydatasyncer_spark.operators.diff import diff_snapshots
+    from mydatasyncer_spark.operators.validation import validate_primary_keys
+    from mydatasyncer_spark.sources.readers import read_file
+
+    file_df = coerce_rfc3339(read_file(syncer.spark, spec.file_path))
+    validate_primary_keys(file_df, spec.primary_key, strict=True)
+    cols = determine_sync_columns(
+        file_cols=file_df.columns,
+        db_cols=syncer.backend.table_columns(spec.name),
+        config_cols=spec.columns,
+        primary_key=spec.primary_key,
+    )
+    db_df = syncer.backend.read_snapshot(syncer.spark, spec.name, cols)
+    return diff_snapshots(
+        file_df.select(*cols), db_df, spec.primary_key, columns=cols
+    ).pin()
+
+
+def test_prepare_folds_probe_into_validation(spark, tmp_path):
+    """One diff-mode table's prepare answers the RFC3339 probe from the
+    PK-validation aggregate: two jobs fewer than probing first, and no
+    more jobs for more string columns."""
+    from mydatasyncer_spark.sinks.applier import DbApiBackend
+    from mydatasyncer_spark.syncer import Syncer
+
+    sc = spark.sparkContext
+
+    def jobs(n_strings, group, prepare):
+        conn, cfg, spec = _csv_table(tmp_path, n_strings)
+        syncer = Syncer(spark, DbApiBackend(conn), cfg)
+        sc.setJobGroup(group, "sync prepare job-count pin")
+        try:
+            diff = prepare(syncer, spec)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert diff.to_insert.count() == 5
+        diff.release()
+        conn.close()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def fused_prepare(syncer, spec):
+        return syncer._prepare(spec).diff
+
+    fused = jobs(2, "prepare-fused", fused_prepare)
+    unfused = jobs(2, "prepare-unfused", _unfused_prepare)
+    wide = jobs(6, "prepare-fused-wide", fused_prepare)
+    assert unfused - fused == 2, (unfused, fused)
+    assert wide == fused, (fused, wide)

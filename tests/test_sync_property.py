@@ -90,7 +90,6 @@ def test_diff_sync_converges_to_snapshot(spark, tmp_path_factory, file_rows, db_
     # and rows that only differ canonically (e.g. "42" vs "42.0")
     # legitimately keep the DB representation
     from mydatasyncer_spark.functions.canonical import canonical_str
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     def canon(pairs):
@@ -102,8 +101,8 @@ def test_diff_sync_converges_to_snapshot(spark, tmp_path_factory, file_rows, db_
             r["id"]: (r["ca"], r["cb"])
             for r in df.select(
                 "id",
-                canonical_str(F.col("a"), T.StringType()).alias("ca"),
-                canonical_str(F.col("b"), T.StringType()).alias("cb"),
+                canonical_str("a", T.StringType()).alias("ca"),
+                canonical_str("b", T.StringType()).alias("cb"),
             ).collect()
         }
 

@@ -325,3 +325,81 @@ class TestSinglePassReport:
             lambda: validate_primary_keys(df, "id", strict=True),
         )
         assert 1 <= used <= budget, (used, budget)
+
+
+class TestRfc3339Keys:
+    """The RFC3339 probe rides the PK-validation aggregate; a PK
+    column that coerces is validated as timestamps."""
+
+    def test_two_spellings_of_one_instant_are_duplicates(self, spark, tmp_path):
+        """A string PK holding one instant in two RFC3339 spellings
+        coerces to one timestamp key: a strict diff sync rejects it
+        with one duplicate, before touching the target."""
+        import sqlite3
+
+        from mydatasyncer_spark.config import SyncConfig, TableSpec
+        from mydatasyncer_spark.sinks.applier import DbApiBackend
+        from mydatasyncer_spark.syncer import sync
+
+        path = tmp_path / "events.csv"
+        path.write_text(
+            "id,note\n"
+            "2024-01-01T00:00:00Z,first\n"
+            "2024-01-01T00:00:00+00:00,second\n"
+            "2024-01-02T00:00:00Z,third\n"
+        )
+        conn = sqlite3.connect(":memory:")
+        conn.execute("CREATE TABLE events (id TEXT PRIMARY KEY, note TEXT)")
+        cfg = SyncConfig(
+            tables=[
+                TableSpec(
+                    name="events",
+                    file_path=str(path),
+                    primary_key="id",
+                    sync_mode="diff",
+                )
+            ]
+        )
+        with pytest.raises(ValidationError) as err:
+            sync(spark, DbApiBackend(conn), cfg)
+        report = err.value.report
+        assert report.total == 3
+        assert report.by_reason == {R_DUPLICATE: 1}
+        assert len(report.duplicate_keys) == 1
+        assert conn.execute("SELECT COUNT(*) FROM events").fetchone() == (0,)
+        conn.close()
+
+    def test_folded_probe_equals_standalone_probe(self, spark):
+        from pyspark.sql import types as T
+
+        from mydatasyncer_spark.sources.readers import coerce_rfc3339
+
+        rows = [
+            ("k1", "2023-12-25T06:30:45Z", "2023-12-25T06:30:45Z", None, "a", 1),
+            ("k2", "2023-12-26T00:00:00+09:00", "nope", None, None, 2),
+            ("k2", None, None, None, "b", 3),
+        ]
+        df = spark.createDataFrame(
+            rows, "id string, rfc string, mixed string, nul string, s string, n int"
+        )
+
+        def converted(frame):
+            out = coerce_rfc3339(frame)
+            return [
+                f.name
+                for f in out.schema.fields
+                if isinstance(f.dataType, T.TimestampType)
+            ]
+
+        for frame, pk in ((df, "id"), (df, "absent"), (df.limit(0), "id")):
+            report = validate_primary_keys(
+                frame, pk, strict=False, probe_rfc3339=True
+            )
+            assert report.rfc3339_columns == converted(frame), pk
+            plain = validate_primary_keys(frame, pk, strict=False)
+            assert plain.rfc3339_columns is None
+            assert (plain.total, plain.by_reason) == (
+                report.total,
+                report.by_reason,
+            )
+        assert converted(df) == ["rfc"]
