@@ -71,7 +71,8 @@ def canonical_sql(name: str, dtype: T.DataType) -> str:
             f" ELSE CAST({c} AS STRING) END"
         )
     elif isinstance(dtype, T.BooleanType):
-        base = f"CASE WHEN {c} THEN 'true' ELSE 'false' END"
+        # no ELSE: NULL stays NULL and reaches the coalesce as ""
+        base = f"CASE WHEN {c} THEN 'true' WHEN NOT {c} THEN 'false' END"
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         base = f"date_format({c}, {sql_str(RFC3339_FORMAT)})"
     elif isinstance(dtype, T.DateType):

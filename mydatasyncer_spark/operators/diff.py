@@ -31,8 +31,6 @@ materialized on the driver.
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +42,7 @@ from mydatasyncer_spark.functions.canonical import (
     sql_ident,
 )
 from mydatasyncer_spark.operators.partitioning import ensure_min_parallelism
+from mydatasyncer_spark.session import SparkPool
 
 _KEY = "_pk_canon"
 BEFORE_COL = "_before"
@@ -53,7 +52,14 @@ KIND_COL = "_kind"
 AFTER_COL = "_after"
 
 
-@dataclass
+#: each leg's projection of the classified frame
+_LEG_COLUMNS = {
+    "insert": (f"{AFTER_COL}.*",),
+    "update": (f"{AFTER_COL}.*", BEFORE_COL),
+    "delete": (f"{BEFORE_COL}.*",),
+}
+
+
 class DiffResult:
     """The plan-level triple (ref: DiffOperations, dbsync.go:138-142).
 
@@ -65,11 +71,21 @@ class DiffResult:
     project (None for a hand-built triple).
     """
 
-    to_insert: DataFrame
-    to_update: DataFrame
-    to_delete: DataFrame
-    changes: DataFrame | None = None
-    _pinned: bool = field(default=False, repr=False)
+    def __init__(
+        self,
+        to_insert: DataFrame | None,
+        to_update: DataFrame | None,
+        to_delete: DataFrame | None,
+        changes: DataFrame | None = None,
+    ):
+        self._legs = {
+            "insert": to_insert,
+            "update": to_update,
+            "delete": to_delete,
+        }
+        self.changes = changes
+        self._delete_not_in_file = True
+        self._pinned = False
 
     @classmethod
     def of_changes(
@@ -79,25 +95,44 @@ class DiffResult:
         insert = ``_after.*``, update = ``_after.*`` + ``_before``,
         delete = ``_before.*`` — the same names, types and order as
         the single-leg joins. With deletes gated off the delete leg
-        is an empty relation (no job when pulled)."""
+        is an empty relation (no job when pulled). Each leg is built
+        on first access, so legs nobody reads cost no analysis."""
+        diff = cls(None, None, None, changes)
+        diff._delete_not_in_file = delete_not_in_file
+        return diff
 
-        def kind(k: str) -> DataFrame:
-            return changes.filter(f"{KIND_COL} = '{k}'")
+    def _leg(self, kind: str) -> DataFrame:
+        leg = self._legs[kind]
+        if leg is None:
+            leg = self.changes.filter(f"{KIND_COL} = '{kind}'").select(
+                *_LEG_COLUMNS[kind]
+            )
+            if kind == "delete" and not self._delete_not_in_file:
+                leg = leg.limit(0)
+            self._legs[kind] = leg
+        return leg
 
-        to_delete = kind("delete").select(f"{BEFORE_COL}.*")
-        return cls(
-            kind("insert").select(f"{AFTER_COL}.*"),
-            kind("update").select(f"{AFTER_COL}.*", BEFORE_COL),
-            to_delete if delete_not_in_file else to_delete.limit(0),
-            changes,
-        )
+    @property
+    def to_insert(self) -> DataFrame:
+        return self._leg("insert")
+
+    @property
+    def to_update(self) -> DataFrame:
+        return self._leg("update")
+
+    @property
+    def to_delete(self) -> DataFrame:
+        return self._leg("delete")
 
     def pin(self) -> "DiffResult":
         """Materialize ``changes`` once (eager ``localCheckpoint``:
-        executor blocks, not replicated) and re-project the legs from
-        it, so pulling all three legs reads the pin instead of running
-        the join three times. Release with :meth:`release`."""
-        pinned = DiffResult.of_changes(self.changes.localCheckpoint(eager=True))
+        executor blocks, not replicated); the pinned result's legs
+        project the checkpoint, so pulling all three legs reads the
+        pin instead of running the join three times. Release with
+        :meth:`release`."""
+        pinned = DiffResult.of_changes(
+            self.changes.localCheckpoint(eager=True), self._delete_not_in_file
+        )
         pinned._pinned = True
         return pinned
 
@@ -415,7 +450,7 @@ def diff_counts_pruned(
     # the two pins are independent jobs — run them concurrently so one
     # side's stragglers back-fill with the other side's tasks (guide
     # §2.6; measured: serial pins cost ~2× the pair's wall at sf0.1)
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with SparkPool(file_df.sparkSession, 2) as pool:
         fut_f = pool.submit(pinned, file_df, "_f_fp")
         fut_d = pool.submit(pinned, db_df, "_d_fp")
         fs, ds = fut_f.result(), fut_d.result()

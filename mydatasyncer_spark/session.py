@@ -19,13 +19,18 @@ from the session active at the first Column or DataFrame call, so a
 process whose session was built without it (a vanilla session) keeps
 capturing — and computes the same results; nothing in the engine
 depends on the setting.
+
+:class:`SparkPool` is the one way the engine runs Spark work on
+threads of its own.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Tuned for the local[32] test harness; on a real cluster these come
 # from spark-submit/cluster conf and AQE re-plans partition counts at
@@ -98,3 +103,23 @@ def get_spark(app_name: str = "mydatasyncer-spark", **extra_conf: str) -> SparkS
     for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+class SparkPool(ThreadPoolExecutor):
+    """A thread pool whose tasks run under the submitting thread's
+    Spark local properties (job group, job description, scheduler
+    pool) and session tags.
+
+    Each submission is wrapped on its own, so it gets its own clone of
+    the properties as they stand at ``submit``: what one task sets
+    (its own job group, say) is not seen by its siblings or by the
+    caller. A wrapper shared by several tasks would hand them all one
+    properties object."""
+
+    def __init__(self, spark: SparkSession, max_workers: int):
+        super().__init__(max_workers=max_workers)
+        self._spark = spark
+
+    def submit(self, fn, /, *args, **kwargs) -> Future:
+        target = inheritable_thread_target(self._spark)(fn)
+        return super().submit(target, *args, **kwargs)

@@ -182,11 +182,10 @@ class JdbcBackend:
         """Parallel, batched staging write. ``mode="overwrite"``
         drops-and-recreates so stale staging tables can't pollute the
         apply; the writer quotes identifiers, so the staging name is
-        pre-quoted to keep its exact (lowercase) spelling."""
-        out = df.select(*columns)
-        n = out.rdd.getNumPartitions()
-        if n > self.staging_partitions:
-            out = out.coalesce(self.staging_partitions)
+        pre-quoted to keep its exact (lowercase) spelling. The leg is
+        coalesced to at most ``staging_partitions`` writers (coalesce
+        never widens, so no partition count is probed first)."""
+        out = df.select(*columns).coalesce(self.staging_partitions)
         writer = (
             out.write.mode("overwrite")
             .option("batchsize", str(self.batchsize))

@@ -16,7 +16,15 @@ writes:
 4. compute each diff as ONE classified full-outer join (J2-J4) and
    pin it once (``DiffResult.pin``); the insert/update/delete legs
    are projections of the pin, so the write transaction never waits
-   on a recomputation and no leg rescans the snapshots;
+   on a recomputation and no leg rescans the snapshots.
+
+   Steps 1-4 of a multi-table sync run concurrently per table: each
+   table's Spark-only steps (1-2, then 4) run on a small thread pool,
+   while the calling thread makes every DB call (the DB column list
+   of step 3 and the DB snapshot), one table at a time in insert
+   order. The dependency DAG orders the writes, not these reads. A
+   one-table sync starts no thread. A failed prepare releases every
+   pin already taken and raises the earliest failing table's error;
 5. dry-run → build plans and stop, zero writes (O8);
 6. else apply: single table in insert→update→delete order inside one
    transaction; multi-table in two phases inside ONE global
@@ -52,6 +60,7 @@ from mydatasyncer_spark.operators.diff import (
 )
 from mydatasyncer_spark.operators.validation import validate_primary_keys
 from mydatasyncer_spark.plans.dryrun import ExecutionPlan, build_plan
+from mydatasyncer_spark.session import SparkPool
 from mydatasyncer_spark.sinks.applier import (
     ApplyStats,
     DbApiBackend,
@@ -69,6 +78,9 @@ from mydatasyncer_spark.sources.readers import (
     read_file,
     validate_file_paths,
 )
+
+#: pool size cap for preparing several tables at once
+_PREPARE_THREADS = 4
 
 
 @dataclass
@@ -138,62 +150,127 @@ class Syncer:
 
     # ------------------------------------------------------------ pipeline
     def _prepare(self, spec: TableSpec) -> _Prepared:
-        """Steps 1-4 for one table — everything distributed, nothing
-        inside the write transaction."""
+        """Steps 1-4 for one table on the calling thread — everything
+        distributed, nothing inside the write transaction."""
+        return self._diff(self._snapshot(spec, *self._load(spec)))
+
+    def _load(self, spec: TableSpec) -> tuple[DataFrame, bool, int | None]:
+        """Steps 1-2: the file snapshot, typed and validated, whether
+        it is empty, and its validated row total (None in overwrite
+        mode). Spark only, so it may run on a pool thread."""
         raw = read_file(self.spark, spec.file_path)
-        file_count = None
-        if spec.sync_mode == SYNC_MODE_DIFF:
-            # one aggregate validates the keys AND answers the RFC3339
-            # probe, so coercion runs no job of its own
-            report = validate_primary_keys(
-                raw, spec.primary_key, strict=False, probe_rfc3339=True
-            )
-            file_df = coerce_rfc3339(raw, probed=report.rfc3339_columns)
-            if report.invalid or spec.primary_key in report.rfc3339_columns:
-                # the verdict (and the failure report) is the coerced
-                # frame's: two spellings of one instant are one key
-                report = validate_primary_keys(
-                    file_df, spec.primary_key, strict=True
-                )
-            # an empty file validates clean; its total doubles as the
-            # emptiness test, so no separate probe job runs
-            file_count = report.total
-            file_empty = file_count == 0
-        else:
+        if spec.sync_mode != SYNC_MODE_DIFF:
             file_df = coerce_rfc3339(raw)
-            file_empty = file_df.isEmpty()
-        db_cols = self.backend.table_columns(spec.name)
+            return file_df, file_df.isEmpty(), None
+        # one aggregate validates the keys AND answers the RFC3339
+        # probe, so coercion runs no job of its own
+        report = validate_primary_keys(
+            raw, spec.primary_key, strict=False, probe_rfc3339=True
+        )
+        file_df = coerce_rfc3339(raw, probed=report.rfc3339_columns)
+        if report.invalid or spec.primary_key in report.rfc3339_columns:
+            # the verdict (and the failure report) is the coerced
+            # frame's: two spellings of one instant are one key
+            report = validate_primary_keys(
+                file_df, spec.primary_key, strict=True
+            )
+        # an empty file validates clean; its total doubles as the
+        # emptiness test, so no separate probe job runs
+        return file_df, report.total == 0, report.total
+
+    def _snapshot(
+        self,
+        spec: TableSpec,
+        file_df: DataFrame,
+        file_empty: bool,
+        file_count: int | None,
+    ) -> _Prepared:
+        """Step 3 and the DB snapshot: the table's DB calls, always on
+        the calling thread (sqlite connections are bound to the thread
+        that opened them; a JDBC backend shares one connection)."""
+        self._check_deadline()
         cols = determine_sync_columns(
             file_cols=[] if file_empty else file_df.columns,
-            db_cols=db_cols,
+            db_cols=self.backend.table_columns(spec.name),
             config_cols=spec.columns,
             primary_key=spec.primary_key,
         )
         db_df = self.backend.read_snapshot(self.spark, spec.name, cols)
-        prep = _Prepared(
+        return _Prepared(
             spec, cols, file_df, db_df, None, file_empty, file_count
         )
-        if spec.sync_mode == SYNC_MODE_DIFF:
-            if spec.prune_buckets > 0:
-                diff = diff_snapshots_pruned(
-                    prep.file_rows,
-                    db_df,
-                    spec.primary_key,
-                    columns=cols,
-                    n_buckets=spec.prune_buckets,
-                    delete_not_in_file=spec.delete_not_in_file,
-                )
-            else:
-                diff = diff_snapshots(
-                    prep.file_rows,
-                    db_df,
-                    spec.primary_key,
-                    columns=cols,
-                    delete_not_in_file=spec.delete_not_in_file,
-                )
-            # pin: the write tx must not re-trigger the scan/join
-            prep.diff = diff.pin()
+
+    def _diff(self, prep: _Prepared) -> _Prepared:
+        """Step 4: the classified diff, pinned so the write transaction
+        never re-triggers the scan/join. Spark only."""
+        spec = prep.spec
+        if spec.sync_mode != SYNC_MODE_DIFF:
+            return prep
+        if spec.prune_buckets > 0:
+            diff = diff_snapshots_pruned(
+                prep.file_rows,
+                prep.db_df,
+                spec.primary_key,
+                columns=prep.sync_columns,
+                n_buckets=spec.prune_buckets,
+                delete_not_in_file=spec.delete_not_in_file,
+            )
+        else:
+            diff = diff_snapshots(
+                prep.file_rows,
+                prep.db_df,
+                spec.primary_key,
+                columns=prep.sync_columns,
+                delete_not_in_file=spec.delete_not_in_file,
+            )
+        prep.diff = diff.pin()
         return prep
+
+    def _prepare_all(
+        self, names: list[str], specs: dict[str, TableSpec]
+    ) -> dict[str, _Prepared]:
+        """Steps 1-4 for every table, in ``names`` order.
+
+        One table runs inline. Several run their Spark-only steps
+        (:meth:`_load`, :meth:`_diff`) on a :class:`SparkPool` while
+        this thread takes the loads in order and makes each table's DB
+        calls (:meth:`_snapshot`) before submitting its diff. On
+        failure, the error is the earliest failing table's; in-flight
+        work is awaited first and every pin taken is released."""
+        if len(names) == 1:
+            return {names[0]: self._prepare(specs[names[0]])}
+        prepared: dict[str, _Prepared] = {}
+        try:
+            with SparkPool(
+                self.spark, min(len(names), _PREPARE_THREADS)
+            ) as pool:
+                loads = [pool.submit(self._load, specs[n]) for n in names]
+                diffs = []
+                failed: Exception | None = None
+                try:
+                    for name, load in zip(names, loads):
+                        prep = self._snapshot(specs[name], *load.result())
+                        diffs.append(pool.submit(self._diff, prep))
+                except Exception as exc:
+                    failed = exc
+                    for load in loads:
+                        load.cancel()
+                # every submitted diff is a table's before the failed
+                # one, so its error comes first
+                errors = []
+                for name, fut in zip(names, diffs):
+                    try:
+                        prepared[name] = fut.result()
+                    except Exception as exc:
+                        errors.append(exc)
+                if failed is not None:
+                    errors.append(failed)
+                if errors:
+                    raise errors[0]
+        except BaseException:
+            self._release(prepared)
+            raise
+        return prepared
 
     def _plan_for(self, prep: _Prepared) -> ExecutionPlan:
         spec = prep.spec
@@ -228,23 +305,18 @@ class Syncer:
         validate_file_paths([t.file_path for t in self.config.tables])
 
         # Phase 0: prepare everything outside the transaction
-        prepared: dict[str, _Prepared] = {}
-        for name in insert_order:
-            self._check_deadline()
-            prepared[name] = self._prepare(specs[name])
-
-        if self.config.dry_run:
-            for name in insert_order:
-                outcome.plans[name] = self._plan_for(prepared[name])
-            self._release(prepared)
-            return outcome
-
-        if self.staging or not isinstance(self.backend, DbApiBackend):
-            return self._run_staged(
-                outcome, prepared, insert_order, delete_order
-            )
-
+        prepared = self._prepare_all(insert_order, specs)
         try:
+            if self.config.dry_run:
+                for name in insert_order:
+                    outcome.plans[name] = self._plan_for(prepared[name])
+                return outcome
+
+            if self.staging or not isinstance(self.backend, DbApiBackend):
+                return self._run_staged(
+                    outcome, prepared, insert_order, delete_order
+                )
+
             with Transaction(self.backend.conn):
                 # Phase A: deletes, child → parent (skip unless
                 # diff + deleteNotInFile, ref: dbsync.go:1077-1079)
@@ -364,7 +436,6 @@ class Syncer:
         finally:
             for legs in staged.values():
                 drop_staged(self.backend, legs)
-            self._release(prepared)
         return outcome
 
     @staticmethod

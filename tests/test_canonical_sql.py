@@ -5,7 +5,8 @@ replaced.
 SQL text. Stored fingerprints, diff join keys and pruning buckets are
 hashes of these strings, so a rewrite that changed one output would
 silently re-key every stored snapshot. The reference below is a frozen
-copy of the Column-by-Column rules as they stood before the rewrite;
+copy of the Column-by-Column rules as they stood before the rewrite
+(with the NULL-boolean fix, the one output meant to change);
 the property compares canonical strings, row fingerprints and bucket
 ids over typed random rows, including NULLs and column names that need
 quoting. A handful of examples keeps it inside the fast gate.
@@ -59,7 +60,9 @@ def ref_canonical_str(col: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, (T.DoubleType, T.FloatType)):
         base = _ref_canonical_float(col)
     elif isinstance(dtype, T.BooleanType):
-        base = F.when(col, F.lit("true")).otherwise(F.lit("false"))
+        # the one deliberate departure from the frozen rules: a NULL
+        # boolean canonicalizes as "" (it used to read "false")
+        base = F.when(col, F.lit("true")).when(~col, F.lit("false"))
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         base = F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss'Z'")
     elif isinstance(dtype, T.DateType):
@@ -230,3 +233,17 @@ def test_negative_zero_is_pinned(spark):
     df = spark.createDataFrame([(-0.0,), (0.0,)], "v double")
     got = [r["c"] for r in df.select(canonical_str("v", T.DoubleType()).alias("c")).collect()]
     assert got == ["0", "0"]
+
+
+def test_null_boolean_is_not_false(spark):
+    """NULL, false and true are three canonical strings and three
+    fingerprints, so a NULL <-> false change is an update."""
+    df = spark.createDataFrame(
+        [(1, None), (2, False), (3, True)], "id long, b boolean"
+    )
+    got = df.select(
+        canonical_str("b", T.BooleanType()).alias("c"),
+        row_fingerprint(df, ["b"]).alias("fp"),
+    ).collect()
+    assert [r["c"] for r in got] == ["", "false", "true"]
+    assert len({r["fp"] for r in got}) == 3
